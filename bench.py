@@ -279,11 +279,11 @@ def _probe_scoring(master: str, sf_dir: str, repeats: int) -> dict:
     big = pairs.withColumn(
         "rep", F.explode(F.array(*[F.lit(i) for i in range(factor)]))
     ).drop("rep")
-    scored = score_pairs(big, docs, id_col="doc_id", name_cap=Q.ER_NAME_CAP)
+    scored = score_pairs(big, docs, id_col="doc_id")
     total_pairs = n_pairs * factor
 
     # warm-up on a small slice: JIT, codegen, Python worker pool
-    _materialize(score_pairs(pairs.limit(5000), docs, id_col="doc_id", name_cap=Q.ER_NAME_CAP))
+    _materialize(score_pairs(pairs.limit(5000), docs, id_col="doc_id"))
     # Each repeat is timed SEPARATELY and the best (fastest) pass is the
     # level's throughput. Measured on this host: back-to-back identical
     # 16-core passes swing 56-121 s (neighbor steal, visible in /proc/stat)

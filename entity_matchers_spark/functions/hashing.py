@@ -114,21 +114,3 @@ def minhash_signature(
         for a, b in params
     ]
     return F.array(*mins)
-
-
-def band_keys(signature: Column, num_bands: int, rows_per_band: int) -> Column:
-    """LSH band keys: array of ``num_bands`` strings ``"<band>:<h1>-<h2>-..."``.
-
-    Two docs share a band key iff their signatures agree on every row of that
-    band — the standard banding construction (probability s^r per band for
-    Jaccard s). Emitted as an array so the caller can ``explode`` into a
-    (doc, block_id) table.
-    """
-    keys = []
-    for band in range(num_bands):
-        parts = [F.lit(f"{band}:")] + [
-            F.concat(F.element_at(signature, band * rows_per_band + r + 1).cast("string"), F.lit("-"))
-            for r in range(rows_per_band)
-        ]
-        keys.append(F.concat(*parts))
-    return F.array(*keys)

@@ -277,18 +277,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(dot / (na * nb))
 
 
-def inner_product(a: Column, b: Column) -> Column:
-    """Dot product — the reference's ``metric='inner'`` bulk similarity
-    (/root/reference/OpenEA_Mod/src/openea/modules/finding/
-    similarity.py:37-46 ``np.matmul(embed1, embed2.T)``), one pair per row
-    instead of a dense n1×n2 matrix. Native zip_with + aggregate."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def euclidean_similarity(a: Column, b: Column) -> Column:
     """``1 - euclidean_distance`` — similarity.py:50-53
     (``1 - euclidean_distances(embed1, embed2)``)."""

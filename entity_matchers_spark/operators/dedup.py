@@ -27,9 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from entity_matchers_spark.functions.hashing import MINHASH_PRIME
-from entity_matchers_spark.functions.shingles import char_shingles, tokens
+from entity_matchers_spark.functions.shingles import tokens
 from entity_matchers_spark.functions.similarity import jaccard_hashed_udf
-from entity_matchers_spark.operators.blocking import cap_block_sizes
 
 SIMHASH_BITS = 60
 SIMHASH_CHUNKS = 4  # pigeonhole: hamming <= 3 pairs share >= 1 of 4 chunks

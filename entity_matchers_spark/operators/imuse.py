@@ -104,19 +104,6 @@ def _decide_entities(contribs: DataFrame, threshold: float) -> DataFrame:
     ).select(F.col("id_a").alias("e1"), F.col("id_b").alias("e2"), F.col("score").alias("sim"))
 
 
-def align_entities_by_attrs(
-    candidates: DataFrame,
-    ev1: DataFrame,
-    ev2: DataFrame,
-    attr_pairs: DataFrame,
-    threshold: float,
-) -> DataFrame:
-    """(e1, e2, sim): per candidate pair, avg Levenshtein ratio over the
-    aligned attribute pairs both entities carry (run_one_ea semantics),
-    thresholded then mutual-best."""
-    return _decide_entities(_pair_contribs(candidates, ev1, ev2, attr_pairs), threshold)
-
-
 def align_attrs_by_entities(
     ent_pairs: DataFrame,
     ev1: DataFrame,

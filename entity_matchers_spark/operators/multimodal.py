@@ -29,21 +29,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("mime", StringType()),
-        StructField("payload", BinaryType()),
-        StructField("n_bytes", LongType()),
-    ]
 )
 
 FEATURE_DIM = 8

@@ -10,7 +10,7 @@ the *blocked candidate-pair DataFrame*.
 Features per pair (one Arrow batch computes all of them, per the
 north-star's "no per-row Python"):
 - Jaro-Winkler on the name-ish prefix (numpy-vectorized pandas UDF)
-- token-set Levenshtein ratio (native levenshtein on capped canonical text,
+- token-set Levenshtein ratio (batched Myers UDF on capped canonical text,
   with an identical-string short-circuit)
 - 3-gram Jaccard over md5-int shingle sets (allocation-free batch UDF)
 - embedding cosine on hashing-trick token vectors (native zip_with/aggregate)
@@ -25,19 +25,24 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from entity_matchers_spark.functions.shingles import char_shingles, hashed_shingles, tokens
+from entity_matchers_spark.functions.shingles import hashed_shingles, tokens
 from entity_matchers_spark.functions.similarity import (
-    cosine_similarity,
     jaccard_hashed_udf,
     jaro_winkler_udf,
-    levenshtein_ratio,
     levenshtein_ratio_fast,
 )
 
 DEFAULT_WEIGHTS = {"jw": 0.25, "tslr": 0.3, "jac3": 0.25, "cos": 0.2}
+# Jaro-Winkler compares the lowercased first NAME_CAP characters.
+NAME_CAP = 64
+# canonical token-set string capped before levenshtein: cost is O(len^2)
+# per pair — the cap bounds it while the sorted-distinct prefix keeps the
+# comparison stable
+TSLR_CAP = 192
+VEC_DIM = 64  # hashing-trick buckets of the cosine feature
 
 
-def hashed_token_vector(text: Column | str, dim: int = 64) -> Column:
+def hashed_token_vector(text: Column | str, dim: int = VEC_DIM) -> Column:
     """Hashing-trick token-count vector as ``array<double>`` — the
     deterministic stand-in for trained embeddings (the reference's char-level
     fallback encoder precedent: literal_encoder.py:150-190). Native:
@@ -74,12 +79,16 @@ def score_pairs(
     docs: DataFrame,
     id_col: str = "id",
     text_col: str = "text",
-    name_cap: int = 64,
-    tslr_cap: int = 192,
+    name_cap: int = NAME_CAP,
     weights: dict[str, float] | None = None,
 ) -> DataFrame:
     """Join candidate pairs to both sides' text, compute the feature struct
     and blended score.
+
+    No rounding anywhere: every feature is computed from the same operands
+    in the same order as the SQL oracle (``queries._er_scores_sql``), so the
+    raw doubles are bit-equal across engines (cosine inputs are small
+    integer counts, so dot and norms are exact).
 
     Join strategy: two shuffle joins on id (the docs table is the big side,
     pairs are ~linear in docs); AQE picks sort-merge vs shuffled-hash per
@@ -105,31 +114,25 @@ def score_pairs(
             ),
         ),
         1,
-        tslr_cap,
+        TSLR_CAP,
     )
     # vector L2 norm is a per-DOC quantity: compute it map-side once and
     # ship the scalar, so the per-pair cosine is one zip_with dot, not three
     vec = hashed_token_vector(F.col(text_col))
-    norm = F.sqrt(
-        F.aggregate(vec, F.lit(0.0), lambda acc, v: acc + v * v)
+    norm = F.sqrt(F.aggregate(vec, F.lit(0.0), lambda acc, v: acc + v * v))
+    sides = docs.select(
+        F.col(id_col).alias("id"),
+        F.lower(F.substring(F.col(text_col), 1, name_cap)).alias("name"),
+        canon.alias("canon"),
+        hashed_shingles(F.lower(F.substring(F.col(text_col), 1, 300))).alias("sh"),
+        vec.alias("vec"),
+        norm.alias("norm"),
     )
-    a = docs.select(
-        F.col(id_col).alias("id_a"),
-        F.lower(F.substring(F.col(text_col), 1, name_cap)).alias("name_a"),
-        canon.alias("canon_a"),
-        hashed_shingles(F.lower(F.substring(F.col(text_col), 1, 300))).alias("sh_a"),
-        vec.alias("vec_a"),
-        norm.alias("norm_a"),
-    )
-    b = docs.select(
-        F.col(id_col).alias("id_b"),
-        F.lower(F.substring(F.col(text_col), 1, name_cap)).alias("name_b"),
-        canon.alias("canon_b"),
-        hashed_shingles(F.lower(F.substring(F.col(text_col), 1, 300))).alias("sh_b"),
-        vec.alias("vec_b"),
-        norm.alias("norm_b"),
-    )
-    joined = pairs.join(a, "id_a").join(b, "id_b")
+
+    def side(s: str) -> DataFrame:
+        return sides.select(*[F.col(c).alias(f"{c}_{s}") for c in sides.columns])
+
+    joined = pairs.join(side("a"), "id_a").join(side("b"), "id_b")
     # identical strings shortcut: CASE short-circuits, so the quadratic
     # levenshtein runs only when the canonical strings actually differ
     # (near-dup-heavy inputs hit the fast branch often)
@@ -139,15 +142,13 @@ def score_pairs(
     scored = joined.select(
         "id_a",
         "id_b",
-        F.round(jaro_winkler_udf(F.col("name_a"), F.col("name_b")), 9).alias("jw"),
-        F.round(tslr, 9).alias("tslr"),
-        F.round(jaccard_hashed_udf(F.col("sh_a"), F.col("sh_b")), 9).alias("jac3"),
-        # cosine over hashing-trick vectors — rounded before blending so the
-        # score stays engine-reproducible despite float summation order
-        F.round(_cosine_precomputed_norms("vec_a", "vec_b", "norm_a", "norm_b"), 6).alias("cos"),
+        jaro_winkler_udf(F.col("name_a"), F.col("name_b")).alias("jw"),
+        tslr.alias("tslr"),
+        jaccard_hashed_udf(F.col("sh_a"), F.col("sh_b")).alias("jac3"),
+        _cosine_precomputed_norms("vec_a", "vec_b", "norm_a", "norm_b").alias("cos"),
     )
     blend = sum(F.col(k) * F.lit(v) for k, v in w.items())
-    return scored.withColumn("score", F.round(blend, 9))
+    return scored.withColumn("score", blend)
 
 
 def fit_threshold(scored_labeled: DataFrame, score_col: str = "score") -> tuple[float, float]:
@@ -161,11 +162,11 @@ def fit_threshold(scored_labeled: DataFrame, score_col: str = "score") -> tuple[
     from pyspark.sql import Window
 
     # Aggregate to one row per DISTINCT score first (map-side combine), so
-    # the unpartitioned cumulative window sorts |distinct scores| rows, not
-    # |labeled pairs| — the single-task sort is bounded by the score
-    # granularity (9-dp blend), not the calibration-set size. Grouping is
-    # also semantically right: a cut inside a tied-score run is not a
-    # realizable threshold.
+    # the unpartitioned cumulative window sorts |distinct scores| rows.
+    # Scores are unrounded doubles, so that can be as many rows as there
+    # are labeled pairs; only exact ties shrink it. Grouping is also
+    # semantically right: a cut inside a tied-score run is not a realizable
+    # threshold.
     per_score = (
         scored_labeled.select(score_col, "label")
         .groupBy(score_col)

@@ -37,8 +37,6 @@ same audit made feasible at corpus scale.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -196,10 +194,6 @@ SELECT {group_alias},
                   ELSE e_raw END, 4) AS est_distinct
 FROM est
 """
-
-
-def _self_check() -> None:  # pragma: no cover - debugging aid
-    assert math.isfinite(EST_NUMERATOR)
 
 
 # ---------------------------------------------------------------------------

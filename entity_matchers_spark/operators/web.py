@@ -16,7 +16,7 @@ Java-regex ∩ RE2 common subset so the DuckDB oracles replay them exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from entity_matchers_spark.functions.hashing import stable_hash32

@@ -33,6 +33,9 @@ from entity_matchers_spark.operators import blocking, clustering, matching, scor
 
 @dataclass
 class PipelineConfig:
+    # The registry blocks with the same blocking.minhash_block_keys but
+    # queries.ER_BANDS = 8 bands, the value its oracle SQL is generated
+    # from. The pipeline keeps 16: the er_fresh F1 pins were recorded at 16.
     num_bands: int = 16
     rows_per_band: int = 2
     shingle_n: int = 3

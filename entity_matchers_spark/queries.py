@@ -18,14 +18,8 @@ from entity_matchers_spark.functions.hashing import (
     MINHASH_PRIME,
     minhash_permutation_params,
 )
-from entity_matchers_spark.functions.shingles import char_shingles, hashed_shingles, tokens
-from entity_matchers_spark.functions.similarity import (
-    jaccard_arrays,
-    jaccard_hashed_udf,
-    jaro_winkler_udf,
-    token_set_levenshtein_ratio,
-)
-from entity_matchers_spark.operators import blocking, clustering, matching
+from entity_matchers_spark.functions.shingles import hashed_shingles, tokens
+from entity_matchers_spark.operators import blocking, clustering, matching, scoring
 
 # ---------------------------------------------------------------------------
 # shared ER-on-documents config (documents table stands in for web_pages:
@@ -35,12 +29,6 @@ ER_BANDS = 8
 ER_ROWS = 2
 ER_SEED = 11037
 ER_CAP = 64
-ER_NAME_CAP = 64
-# canonical token-set string capped before levenshtein: cost is O(len^2)
-# per pair and the builtin allocates 2 int rows per call — the cap bounds
-# both while the sorted-distinct prefix keeps the comparison stable
-ER_TSLR_CAP = 192
-ER_VEC_DIM = 64
 ER_EDGE_THRESHOLD = 0.8
 
 
@@ -157,14 +145,17 @@ _TSLR_CANON = (
 
 
 def _er_scores_sql() -> str:
-    """Scored pairs CTE (requires blocks + pairs CTEs)."""
-    canon_a = f"substr({_TSLR_CANON.format(c='da.text')}, 1, {ER_TSLR_CAP})"
-    canon_b = f"substr({_TSLR_CANON.format(c='db.text')}, 1, {ER_TSLR_CAP})"
+    """Scored pairs CTE (requires blocks + pairs CTEs): the oracle of
+    ``scoring.score_pairs``, built from that module's caps, vector dim and
+    blend weights."""
+    canon_a = f"substr({_TSLR_CANON.format(c='da.text')}, 1, {scoring.TSLR_CAP})"
+    canon_b = f"substr({_TSLR_CANON.format(c='db.text')}, 1, {scoring.TSLR_CAP})"
+    blend = " + ".join(f"{k} * {v!r}" for k, v in scoring.DEFAULT_WEIGHTS.items())
     return f"""
   tok_b AS MATERIALIZED (
     SELECT id, b, count(*)::DOUBLE AS c FROM (
       SELECT doc_id AS id,
-             (('0x'||substr(md5(t),1,8))::UBIGINT::BIGINT % {ER_VEC_DIM}) AS b
+             (('0x'||substr(md5(t),1,8))::UBIGINT::BIGINT % {scoring.VEC_DIM}) AS b
       FROM (SELECT doc_id,
                    unnest(list_filter(string_split_regex(lower(text), '\\s+'),
                                       x -> x != '')) AS t
@@ -181,8 +172,8 @@ def _er_scores_sql() -> str:
   ),
   scored AS MATERIALIZED (
     SELECT pairs.id_a AS id_a, pairs.id_b AS id_b,
-      jaro_winkler_similarity(lower(substr(da.text, 1, {ER_NAME_CAP})),
-                              lower(substr(db.text, 1, {ER_NAME_CAP}))) AS jw,
+      jaro_winkler_similarity(lower(substr(da.text, 1, {scoring.NAME_CAP})),
+                              lower(substr(db.text, 1, {scoring.NAME_CAP}))) AS jw,
       CASE WHEN {canon_a} = {canon_b} THEN 1.0
            WHEN greatest(len({canon_a}), len({canon_b})) = 0 THEN 1.0
             ELSE 1.0 - levenshtein({canon_a}, {canon_b})
@@ -202,8 +193,7 @@ def _er_scores_sql() -> str:
     LEFT JOIN dots d ON pairs.id_a = d.id_a AND pairs.id_b = d.id_b
   ),
   final_scored AS MATERIALIZED (
-    SELECT id_a, id_b, jw, tslr, jac3, cos,
-           jw * 0.25 + tslr * 0.3 + jac3 * 0.25 + cos * 0.2 AS score
+    SELECT id_a, id_b, jw, tslr, jac3, cos, {blend} AS score
     FROM scored
   )
 """
@@ -230,7 +220,12 @@ def _er_spark_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _er_spark_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _er_cached(spark, sf_dir, "scores", lambda: _er_spark_scores_build(spark, sf_dir))
+    return _er_cached(
+        spark, sf_dir, "scores",
+        lambda: scoring.score_pairs(
+            _er_spark_pairs(spark, sf_dir), _docs(spark, sf_dir), id_col="doc_id"
+        ),
+    )
 
 
 def _er_spark_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -248,69 +243,6 @@ def _er_spark_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("id").alias("doc_id"), "cluster_id"
         )
     return _er_cached(spark, sf_dir, "clusters", build)
-
-
-def _er_spark_scores_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from entity_matchers_spark.functions.similarity import levenshtein_ratio_fast
-
-    docs = _docs(spark, sf_dir)
-    pairs = _er_spark_pairs(spark, sf_dir)
-    # The scored select below is compute-bound (JW pandas UDF + levenshtein
-    # on ~300-char strings); the doc sides broadcast at test scale, so the
-    # pair partitioning is what the scoring stage inherits — spread it.
-    from entity_matchers_spark.session import default_partitions
-
-    pairs = pairs.repartition(default_partitions(spark), "id_a", "id_b")
-    # Per-doc features are computed ONCE here; the join shuffle materializes
-    # them, so the pair-level expressions below see plain arrays/strings.
-    canon = F.concat_ws(
-        " ", F.sort_array(F.array_distinct(F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")))
-    )
-    from entity_matchers_spark.operators.scoring import (
-        _cosine_precomputed_norms,
-        hashed_token_vector,
-    )
-
-    vec = hashed_token_vector("text", dim=ER_VEC_DIM)
-    norm = F.sqrt(F.aggregate(vec, F.lit(0.0), lambda acc, v: acc + v * v))
-    sides = docs.select(
-        F.col("doc_id").alias("id"),
-        F.lower(F.substring("text", 1, ER_NAME_CAP)).alias("name"),
-        F.substring(canon, 1, ER_TSLR_CAP).alias("canon"),
-        hashed_shingles(F.lower(F.substring("text", 1, 300))).alias("sh"),
-        vec.alias("vec"),
-        norm.alias("norm"),
-    )
-    a = sides.select(
-        F.col("id").alias("id_a"), F.col("name").alias("name_a"),
-        F.col("canon").alias("canon_a"), F.col("sh").alias("sh_a"),
-        F.col("vec").alias("vec_a"), F.col("norm").alias("norm_a"),
-    )
-    b = sides.select(
-        F.col("id").alias("id_b"), F.col("name").alias("name_b"),
-        F.col("canon").alias("canon_b"), F.col("sh").alias("sh_b"),
-        F.col("vec").alias("vec_b"), F.col("norm").alias("norm_b"),
-    )
-    tslr = F.when(F.col("canon_a") == F.col("canon_b"), F.lit(1.0)).otherwise(
-        levenshtein_ratio_fast("canon_a", "canon_b")
-    )
-    scored = (
-        pairs.join(a, "id_a").join(b, "id_b")
-        .select(
-            "id_a", "id_b",
-            jaro_winkler_udf(F.col("name_a"), F.col("name_b")).alias("jw"),
-            tslr.alias("tslr"),
-            jaccard_hashed_udf(F.col("sh_a"), F.col("sh_b")).alias("jac3"),
-            _cosine_precomputed_norms("vec_a", "vec_b", "norm_a", "norm_b").alias("cos"),
-        )
-    )
-    # No rounding anywhere: every feature is computed from identical operands
-    # in identical order in both engines, so the raw doubles are bit-equal
-    # (cosine inputs are small integer counts — dot/norms are exact).
-    return scored.withColumn(
-        "score",
-        F.col("jw") * 0.25 + F.col("tslr") * 0.3 + F.col("jac3") * 0.25 + F.col("cos") * 0.2,
-    )
 
 
 # --- query builders ----------------------------------------------------------
@@ -2429,15 +2361,6 @@ SELECT (SELECT count(*) FROM out_truth) AS n_out_truth,
 
 # --- matching / evaluation extensions (SURVEY.md §2.5-2.6) -------------------
 
-_BEST_A_CTE = """
-  best_a AS (
-    SELECT id_a, id_b FROM (
-      SELECT id_a, id_b,
-             row_number() OVER (PARTITION BY id_a ORDER BY score DESC, id_b ASC) AS rn
-      FROM {src}) WHERE rn = 1
-  )"""
-
-
 def q_er_greedy_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy argmax alignment per left id (alignment.py:13-89)."""
     scored = _er_spark_scores(spark, sf_dir)
@@ -3930,11 +3853,7 @@ def q_er_truncated_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     folded = assign_folds(scored.select("id_a", "id_b"), n_folds=5)
     train = folded.where(F.col("fold") == 0).select("id_a", "id_b")
     truncated = top5.join(train, ["id_a", "id_b"], "left_anti")
-    gold = (
-        _er_cached(spark, sf_dir, "scores", lambda: _er_spark_scores_build(spark, sf_dir))
-        .where(F.col("jac3") >= 0.55)
-        .select("id_a", "id_b")
-    )
+    gold = scored.where(F.col("jac3") >= 0.55).select("id_a", "id_b")
     gold_train = gold.join(train, ["id_a", "id_b"], "left_semi")
     injected = gold_train.join(truncated, ["id_a", "id_b"], "left_anti")
     return truncated.withColumn("injected", F.lit(False)).unionByName(

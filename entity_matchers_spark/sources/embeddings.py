@@ -25,7 +25,7 @@ pre-trained-vector path when a .vec artifact IS available.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 

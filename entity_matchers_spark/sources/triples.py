@@ -27,19 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
-
-TRIPLE_SCHEMA = StructType(
-    [
-        StructField("h", StringType()),
-        StructField("r", StringType()),
-        StructField("t", StringType()),
-    ]
-)
-
-LINK_SCHEMA = StructType(
-    [StructField("e1", StringType()), StructField("e2", StringType())]
-)
 
 
 def _read_tsv_exact(

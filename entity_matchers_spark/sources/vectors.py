@@ -23,7 +23,6 @@ any driver/.npy path, trivially fine as a distributed columnar table.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, FloatType
 
 
@@ -78,15 +77,3 @@ def read_embedding_table(
             f"`{vec_col}` must be array<float|double>, got {vec_type.simpleString()}"
         )
     return df
-
-
-def embedding_table_stats(df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """One-row integrity summary (n_vectors, distinct ids, dim min/max) —
-    the cheap invariant a resuming pipeline asserts before trusting a
-    checkpoint (ids unique, rectangular matrix)."""
-    return df.agg(
-        F.count("*").alias("n_vectors"),
-        F.countDistinct(F.col(id_col)).alias("n_ids"),
-        F.min(F.size(F.col(vec_col))).alias("dim_min"),
-        F.max(F.size(F.col(vec_col))).alias("dim_max"),
-    )

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
     TimestampType,

@@ -3,6 +3,7 @@
 - blocking pair-recall on planted duplicates
 - pairwise F1 ≥ 0.99 on labeled pairs sharing a blocking key
 - kill-and-rerun resume: identical final cluster table (FIXTURES.md §4)
+- oracle parity: ``score_pairs`` equals the DuckDB ``er_pair_scores`` oracle
 """
 
 from __future__ import annotations
@@ -77,3 +78,27 @@ def test_pipeline_resume_identical(spark, corpus, tmp_path_factory):
 
     shutil.rmtree(root_a, ignore_errors=True)
     shutil.rmtree(root_b, ignore_errors=True)
+
+
+def test_score_pairs_matches_sql_oracle(spark):
+    """``score_pairs`` is the one pair scorer the registry, the pipeline and
+    the benchmarks run: over the registry's sf0.001 ER candidate pairs its
+    features and blend must equal the DuckDB oracle bit for bit (full-
+    precision repr, as the correctness gate compares them)."""
+    import duckdb
+
+    from entity_matchers_spark import queries as Q
+    from tools.check_correctness import canon_rows
+
+    sf_dir = "/root/testdata/sf0.001"
+    pairs, docs = Q._er_spark_pairs(spark, sf_dir), Q._docs(spark, sf_dir)
+    scored = scoring.score_pairs(pairs, docs, id_col="doc_id")
+    cols, got = canon_rows(scored.columns, [tuple(r) for r in scored.collect()])
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
+    oracle = con.sql(Q.Q_ER_PAIR_SCORES_SQL)
+    ocols, want = canon_rows(oracle.columns, oracle.fetchall())
+    assert cols == ocols
+    assert len(got) == len(want) > 0
+    bad = [(g, w) for g, w in zip(got, want) if g != w]
+    assert not bad, f"{len(bad)} of {len(want)} rows differ; first (spark, oracle): {bad[0]}"

@@ -20,14 +20,21 @@ def test_triple_tsv_roundtrip(spark, tmp_path):
 
 
 def test_triple_tsv_strict_raises(spark, tmp_path):
-    from entity_matchers_spark.sources.triples import read_relation_triples
+    from entity_matchers_spark.sources.triples import read_links, read_relation_triples
 
-    p = tmp_path / "bad.tsv"
-    p.write_text("a\tr1\tb\nmalformed-line\n")
-    with pytest.raises(ValueError, match="malformed"):
-        read_relation_triples(spark, str(p), strict=True)
-    ok = read_relation_triples(spark, str(p), strict=False)
-    assert ok.count() == 1
+    # each reader's exact field count: a row with fewer OR more fields is
+    # malformed (the 3-field row is a valid triple but a malformed link)
+    cases = [
+        (read_relation_triples, "a\tr1\tb\nmalformed-line\n", [("a", "r1", "b")]),
+        (read_links, "e1\te2\nmalformed-line\na\tr1\tb\n", [("e1", "e2")]),
+    ]
+    for i, (reader, text, rows) in enumerate(cases):
+        p = tmp_path / f"bad{i}.tsv"
+        p.write_text(text)
+        with pytest.raises(ValueError, match="malformed"):
+            reader(spark, str(p), strict=True)
+        ok = reader(spark, str(p), strict=False)
+        assert [tuple(r) for r in ok.collect()] == rows
 
 
 def test_attr_tsv_lenient_rejoins_tabs(spark, tmp_path):
