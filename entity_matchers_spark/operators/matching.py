@@ -40,6 +40,27 @@ def _bipartite_node_exprs(scored: DataFrame):
     )
 
 
+def _by_component(scored: DataFrame, score_col: str) -> tuple[DataFrame, DataFrame]:
+    """Split the bipartite candidate graph over (id_a, id_b) into connected
+    components: one hash-min :func:`connected_components` pass over the
+    :func:`_bipartite_node_exprs` node ids. Returns ``(pairs, comp)`` —
+    the (id_a, id_b, score, cluster_id) edges, with ``score_col`` renamed
+    to ``score``, and the (id, cluster_id) node labels."""
+    from entity_matchers_spark.operators.clustering import connected_components
+
+    u_expr, v_expr = _bipartite_node_exprs(scored)
+    comp = connected_components(
+        scored.select(u_expr.alias("u"), v_expr.alias("v")), src="u", dst="v"
+    )
+    pairs = (
+        scored.select("id_a", "id_b", F.col(score_col).alias("score"))
+        .withColumn("u", u_expr)
+        .join(comp.withColumnRenamed("id", "u"), "u")
+        .drop("u")
+    )
+    return pairs, comp
+
+
 def best_per_side(scored: DataFrame, side: str, score_col: str = "score") -> DataFrame:
     """Argmax over the other side for each id on ``side`` ('a' or 'b'),
     deterministic tie-break on the partner id ascending."""
@@ -278,32 +299,18 @@ def stable_marriage_components(
     (/root/reference/OpenEA_Mod/src/openea/modules/finding/alignment.py:
     92-148,180-233); same tie-break (score desc, partner id asc).
 
-    After a working blocking stage components are tiny — the identical
-    argument (and code shape) as :func:`mwgm_exact`. Components larger
-    than ``max_component`` nodes are routed to the round-based
-    :func:`stable_marriage` loop, which handles any size in bounded
-    per-round memory: one pathological block degrades locally instead of
-    OOMing an executor or aborting the job.
+    After a working blocking stage components are tiny — the same
+    argument as :func:`mwgm_exact`, and the same :func:`_by_component`
+    split. Components larger than ``max_component`` nodes are routed to
+    the round-based :func:`stable_marriage` loop, which handles any size
+    in bounded per-round memory: one pathological block degrades locally
+    instead of OOMing an executor or aborting the job.
     """
     import pandas as pd
 
-    from entity_matchers_spark.operators.clustering import connected_components
-
-    u_expr, v_expr = _bipartite_node_exprs(scored)
-    edges = scored.select(
-        "id_a", "id_b", F.col(score_col).alias("score")
-    ).withColumn("u", u_expr)
-    comp = connected_components(
-        edges.withColumn("v", v_expr),
-        src="u",
-        dst="v",
-    )
+    pairs, comp = _by_component(scored, score_col)
     sizes = comp.groupBy("cluster_id").agg(F.count("*").alias("_csz"))
-    pairs = (
-        edges.join(comp.withColumnRenamed("id", "u"), "u")
-        .drop("u")
-        .join(sizes, "cluster_id")
-    )
+    pairs = pairs.join(sizes, "cluster_id")
     out_schema = pairs.select("id_a", "id_b", "score").schema
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -462,81 +469,16 @@ def hard_negatives(
     )
 
 
-def _hungarian_max(weights):
-    """Exact max-weight assignment on a rectangular weight matrix (numpy,
-    no scipy in this environment). Returns (rows, cols, u, v): index arrays
-    of the optimal assignment of the PADDED square problem plus the final
-    dual potentials (0-based, length n = max(shape)) satisfying
-    ``u[i] + v[j] <= -w_padded[i, j]`` everywhere with equality on
-    assignment cells — the LP-optimality certificate. Callers drop pairs
-    with non-positive weight (zero-padded cells = "leave unmatched", valid
-    because every real edge weight is > 0).
-
-    Classic O(n^3) shortest-augmenting-path Hungarian (potentials u/v, one
-    augmentation per row) with the inner column scan vectorized in numpy —
-    fine for the per-component sizes blocking produces (tens of nodes).
-    """
-    import numpy as np
-
-    w = np.asarray(weights, dtype=np.float64)
-    n = max(w.shape)
-    cost = np.zeros((n + 1, n + 1))
-    cost[1 : w.shape[0] + 1, 1 : w.shape[1] + 1] = -w  # maximize -> minimize
-    u = np.zeros(n + 1)
-    v = np.zeros(n + 1)
-    p = np.zeros(n + 1, dtype=np.int64)  # p[j] = row matched to column j
-    way = np.zeros(n + 1, dtype=np.int64)
-    cols = np.arange(n + 1)
-    for i in range(1, n + 1):
-        p[0] = i
-        j0 = 0
-        minv = np.full(n + 1, np.inf)
-        used = np.zeros(n + 1, dtype=bool)
-        while True:
-            used[j0] = True
-            i0 = p[j0]
-            free = ~used
-            free[0] = False
-            cur = cost[i0, free] - u[i0] - v[free]
-            sub = minv[free]
-            upd = cur < sub
-            minv[free] = np.where(upd, cur, sub)
-            wayf = way[free]
-            wayf[upd] = j0
-            way[free] = wayf
-            fidx = cols[free]
-            if fidx.size == 0:
-                break
-            k = np.argmin(minv[free])
-            j1 = int(fidx[k])
-            delta = minv[j1]
-            u[p[used]] += delta
-            v[used] -= delta
-            minv[~used] -= delta
-            j0 = j1
-            if p[j0] == 0:
-                break
-        while j0 != 0:
-            j1 = way[j0]
-            p[j0] = p[j1]
-            j0 = j1
-    rows = np.empty(n, dtype=np.int64)
-    rows[p[1:] - 1] = cols[1:] - 1
-    # rows[r] = column assigned to row r
-    return np.arange(n), rows, u[1:], v[1:]
-
-
-# Components up to this many nodes use the dense padded-square Hungarian
-# (O(n^2) memory, vectorized inner scan); larger ones — up to
-# ``max_component`` — switch to the sparse edge-list kernel below.
-MWGM_DENSE_MAX = 512
+# Components above this many nodes get the greedy 1/2-approximation
+# instead of the exact sparse Hungarian (no duals: reported as uncertified).
+MAX_COMPONENT = 50_000
 
 
 def _sparse_hungarian_max(ia, ib, wj, nl, nr):
     """Exact max-weight bipartite matching on ONE component's sparse edge
-    list, with LP dual potentials — the LAPJVsp-shaped path for components
-    too large for the dense O(n^2)-memory kernel but far below the greedy
-    degradation threshold.
+    list, with LP dual potentials — the LAPJVsp-shaped kernel that solves
+    every component up to ``MAX_COMPONENT`` nodes (larger ones take the
+    greedy fallback).
 
     Successive shortest augmenting paths (one Dijkstra per left node over
     reduced costs) on the min-cost formulation ``c = -w`` with a virtual
@@ -551,8 +493,8 @@ def _sparse_hungarian_max(ia, ib, wj, nl, nr):
       update, a left finishing on its dummy ends at exactly 0).
 
     By weak LP duality those conditions prove the matching is maximum
-    weight, so :func:`mwgm_exact_duals` can certify this path with the
-    same declarative edge checks as the dense one.  Returns
+    weight, so :func:`mwgm_exact_duals` certifies it with declarative
+    edge checks plus these node-side conditions.  Returns
     ``(match_l, ya, yb)`` with ``match_l[i]`` the matched right index or
     -1.  Deterministic for distinct (jittered) weights; heap ties break
     on the right-node index.
@@ -678,11 +620,51 @@ def _greedy_component_match(ia, ib, wj, n_a, n_b):
     return rows, cols
 
 
+def _solve_component(pdf, max_component: int):
+    """Match one connected component's edges (pandas ``id_a``/``id_b``/
+    ``score``): the shared per-component solve of :func:`mwgm_exact` and
+    :func:`mwgm_exact_duals`.
+
+    Weights are perturbed by ``1e-9 * U(id_a, id_b)`` with U a
+    deterministic md5-derived uniform, so tie-breaks among equal-weight
+    optima are stable at any parallelism. Components of up to
+    ``max_component`` nodes are solved exactly by
+    :func:`_sparse_hungarian_max`; larger ones by the greedy
+    :func:`_greedy_component_match`, which has no duals.
+
+    Returns ``(la, lb, ia, ib, s, match_l, ya, yb)``: node labels per
+    side, each edge's label indices and raw score, ``match_l[i]`` the
+    index into ``lb`` matched to ``la[i]`` (or -1), and the dual
+    potentials per side — both ``None`` after the greedy fallback.
+    """
+    import hashlib
+
+    import numpy as np
+
+    la, ia = np.unique(pdf["id_a"].to_numpy(), return_inverse=True)
+    lb, ib = np.unique(pdf["id_b"].to_numpy(), return_inverse=True)
+    s = pdf["score"].to_numpy(dtype=np.float64)
+    jitter = np.array(
+        [
+            int.from_bytes(hashlib.md5(f"{a}\t{b}".encode()).digest()[:4], "big")
+            / 2**32
+            for a, b in zip(pdf["id_a"], pdf["id_b"])
+        ]
+    )
+    wj = s + 1e-9 * jitter
+    if la.size + lb.size > max_component:
+        rows, cols = _greedy_component_match(ia, ib, wj, la.size, lb.size)
+        match_l = np.full(la.size, -1, dtype=np.int64)
+        match_l[rows] = cols
+        return la, lb, ia, ib, s, match_l, None, None
+    match_l, ya, yb = _sparse_hungarian_max(ia, ib, wj, la.size, lb.size)
+    return la, lb, ia, ib, s, match_l, ya, yb
+
+
 def mwgm_exact(
     scored: DataFrame,
     score_col: str = "score",
-    max_component: int = 50_000,
-    oversize: str = "greedy",
+    max_component: int = MAX_COMPONENT,
 ) -> DataFrame:
     """EXACT max-weight bipartite matching over the blocked candidate set.
 
@@ -692,95 +674,34 @@ def mwgm_exact(
     driver-side library call — unusable at 10^12 docs. The matching
     polytope decomposes over connected components, so the distributed
     shape is: hash-min connected components over the candidate edges, then
-    one exact Hungarian solve PER COMPONENT inside ``applyInPandas``
-    (components after blocking are tiny; the all-pairs structure the
-    reference feeds graph-tool never arises).
+    one exact sparse Hungarian solve PER COMPONENT inside
+    ``applyInPandas`` (components after blocking are tiny; the all-pairs
+    structure the reference feeds graph-tool never arises).
 
-    Determinism among equal-weight optima: weights are perturbed by
-    ``1e-9 * U(id_a, id_b)`` with U a deterministic md5-derived uniform,
-    so tie-breaks are stable at any parallelism (the reference inherits
+    Determinism among equal-weight optima comes from the deterministic
+    weight jitter of :func:`_solve_component` (the reference inherits
     graph-tool's internal order instead).
 
     Components larger than ``max_component`` nodes fall back to a
     vectorized iterated-mutual-best greedy matching WITHIN the component
-    (``oversize="greedy"``, the default — a 1/2-approximation, the same
-    guarantee as ``greedy_weighted_matching``): a petabyte job must
-    degrade locally on one pathological block, never abort after hours.
-    ``oversize="raise"`` restores the strict behavior for pipelines that
-    want a misconfigured blocking stage to fail fast.
+    (a 1/2-approximation, the same guarantee as
+    ``greedy_weighted_matching``): a petabyte job must degrade locally on
+    one pathological block, never abort after hours.
 
-    Returns (id_a, id_b, score) of the optimal (or, for oversized
-    components only, 1/2-approximate) matching.
+    Returns (id_a, id_b, score) of the optimal (or, for components above
+    ``max_component`` only, 1/2-approximate) matching.
     """
     import pandas as pd
 
-    from entity_matchers_spark.operators.clustering import connected_components
-
-    u_expr, v_expr = _bipartite_node_exprs(scored)
-    edges = scored.select(u_expr.alias("u"), v_expr.alias("v"))
-    comp = connected_components(edges, src="u", dst="v")
-    pairs = (
-        scored.select("id_a", "id_b", F.col(score_col).alias("score"))
-        .withColumn("u", u_expr)
-        .join(comp.withColumnRenamed("id", "u"), "u")
-        .drop("u")
-    )
+    pairs, _ = _by_component(scored, score_col)
     out_schema = pairs.select("id_a", "id_b", "score").schema
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        import hashlib
-
         import numpy as np
 
-        la, ia = np.unique(pdf["id_a"].to_numpy(), return_inverse=True)
-        lb, ib = np.unique(pdf["id_b"].to_numpy(), return_inverse=True)
-        s = pdf["score"].to_numpy(dtype=np.float64)
-        jitter = np.array(
-            [
-                int.from_bytes(
-                    hashlib.md5(f"{a}\t{b}".encode()).digest()[:4], "big"
-                )
-                / 2**32
-                for a, b in zip(pdf["id_a"], pdf["id_b"])
-            ]
-        )
-        wj = s + 1e-9 * jitter
-        if la.size + lb.size > max_component:
-            if oversize == "raise":
-                raise ValueError(
-                    f"mwgm_exact: component with {la.size + lb.size} nodes exceeds "
-                    f"max_component={max_component}; fix the blocking stage"
-                )
-            rows, cols = _greedy_component_match(ia, ib, wj, la.size, lb.size)
-            lookup = {(int(i), int(j)): float(x) for i, j, x in zip(ia, ib, s)}
-            return pd.DataFrame(
-                {
-                    "id_a": la[rows],
-                    "id_b": lb[cols],
-                    "score": [lookup[(int(i), int(j))] for i, j in zip(rows, cols)],
-                }
-            )
-        if la.size + lb.size > MWGM_DENSE_MAX:
-            # too big for an O(n^2)-memory dense grid, still exact: sparse
-            # successive-shortest-paths on the component's edge list
-            ml, _ya, _yb = _sparse_hungarian_max(ia, ib, wj, la.size, lb.size)
-            rows = np.flatnonzero(ml >= 0)
-            cols = ml[rows]
-            lookup = {(int(i), int(j)): float(x) for i, j, x in zip(ia, ib, s)}
-            return pd.DataFrame(
-                {
-                    "id_a": la[rows],
-                    "id_b": lb[cols],
-                    "score": [lookup[(int(i), int(j))] for i, j in zip(rows, cols)],
-                }
-            )
-        w = np.zeros((la.size, lb.size))
-        w[ia, ib] = wj
-        rows, cols, _, _ = _hungarian_max(w)
-        keep = (rows < la.size) & (cols < lb.size)
-        rows, cols = rows[keep], cols[keep]
-        keep = w[rows, cols] > 0
-        rows, cols = rows[keep], cols[keep]
+        la, lb, ia, ib, s, match_l, _, _ = _solve_component(pdf, max_component)
+        rows = np.flatnonzero(match_l >= 0)
+        cols = match_l[rows]
         lookup = {(int(i), int(j)): float(x) for i, j, x in zip(ia, ib, s)}
         return pd.DataFrame(
             {
@@ -796,176 +717,70 @@ def mwgm_exact(
 def mwgm_exact_duals(
     scored: DataFrame,
     score_col: str = "score",
-    max_component: int = 50_000,
+    max_component: int = MAX_COMPONENT,
     eps: float = 1e-7,
 ) -> DataFrame:
-    """Exact MWGM (same decomposition as :func:`mwgm_exact`) that ALSO emits
-    the Hungarian dual potentials, so downstream joins can verify the
-    LP-optimality certificate declaratively.
+    """Exact MWGM (same per-component solve as :func:`mwgm_exact`) that
+    ALSO emits the sparse Hungarian's dual potentials, so downstream joins
+    can verify the LP-optimality certificate declaratively.
 
     Output rows come in two kinds:
 
     - ``kind='N'`` — one per bipartite node: (side 'a'/'b', node id as
       string, dual ``y`` with the sign convention ``y_a + y_b >= w`` on
       every candidate edge, and the matched ``partner`` id or NULL).
-    - ``kind='G'`` — one per connected component: ``viol`` counts the
-      padded-square grid conditions only the solver can see (feasibility
-      ``u_i + v_j <= cost_ij`` over ALL n×n cells including zero/padding
-      cells, and tightness on assignment cells). 0 ⟺ certificate holds.
+    - ``kind='G'`` — one per exactly-solved component: ``viol`` counts
+      the node-side conditions only the solver sees (``y >= -eps`` on
+      every node, ``|y| <= eps`` on unmatched nodes). 0 ⟺ they hold.
 
-    By LP strong duality for the assignment polytope, a permutation with
-    feasible potentials tight on its own cells is optimal for the padded
-    square problem, whose optimum equals the max-weight matching (padding
-    and missing edges cost 0, real weights > 0) — so ``viol = 0`` plus the
-    declarative edge checks prove the emitted matching is a maximum-weight
-    matching of the candidate graph (up to the 1e-9 deterministic
-    tie-break jitter, which is below ``eps``). Reference semantics:
-    mwgm_graph_tool (/root/reference/OpenEA_Mod/src/openea/modules/
-    bootstrapping/alignment_finder.py:84-140).
+    Together with the declarative edge checks (feasibility
+    ``y_a + y_b >= w`` on every candidate edge, equality on matched
+    edges) these are the complete KKT conditions of the matching LP, so
+    by weak LP duality ``viol = 0`` plus zero edge violations prove the
+    emitted matching is a maximum-weight matching of the candidate graph
+    (up to the 1e-9 deterministic tie-break jitter, which is below
+    ``eps``). Reference semantics: mwgm_graph_tool
+    (/root/reference/OpenEA_Mod/src/openea/modules/bootstrapping/
+    alignment_finder.py:84-140).
 
     Components larger than ``max_component`` degrade to the greedy
     1/2-approx (same policy and kernel as :func:`mwgm_exact`): their node
-    rows carry NULL duals, which downstream certificate checks treat as
-    "uncertified" rather than violated — a petabyte job must degrade
-    locally on one pathological block, never abort. The certificate
-    summary exposes the uncertified edge count so the degradation is
-    driver-visible, and the SQL oracle recomputes it independently from
-    the component structure.
+    rows carry NULL duals and no ``G`` row, which downstream certificate
+    checks treat as "uncertified" rather than violated — a petabyte job
+    must degrade locally on one pathological block, never abort. The
+    certificate summary exposes the uncertified edge count so the
+    degradation is driver-visible, and the SQL oracle recomputes it
+    independently from the component structure.
     """
     import pandas as pd
 
-    from entity_matchers_spark.operators.clustering import connected_components
-
-    u_expr, v_expr = _bipartite_node_exprs(scored)
-    edges = scored.select(u_expr.alias("u"), v_expr.alias("v"))
-    comp = connected_components(edges, src="u", dst="v")
-    pairs = (
-        scored.select("id_a", "id_b", F.col(score_col).alias("score"))
-        .withColumn("u", u_expr)
-        .join(comp.withColumnRenamed("id", "u"), "u")
-        .drop("u")
-    )
+    pairs, _ = _by_component(scored, score_col)
     out_schema = (
         "kind string, side string, node string, y double, partner string, viol long"
     )
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        import hashlib
-
         import numpy as np
 
-        la, ia = np.unique(pdf["id_a"].to_numpy(), return_inverse=True)
-        lb, ib = np.unique(pdf["id_b"].to_numpy(), return_inverse=True)
-        s = pdf["score"].to_numpy(dtype=np.float64)
-        jitter = np.array(
-            [
-                int.from_bytes(hashlib.md5(f"{a}\t{b}".encode()).digest()[:4], "big")
-                / 2**32
-                for a, b in zip(pdf["id_a"], pdf["id_b"])
-            ]
-        )
-        if la.size + lb.size > max_component:
-            wj = s + 1e-9 * jitter
-            rows, cols = _greedy_component_match(ia, ib, wj, la.size, lb.size)
-            partner_of_a = {int(r): int(c) for r, c in zip(rows, cols)}
-            partner_of_b = {int(c): int(r) for r, c in zip(rows, cols)}
-            kinds, sides, nodes, ys, partners = [], [], [], [], []
-            for i in range(la.size):
-                kinds.append("N")
-                sides.append("a")
-                nodes.append(str(la[i]))
-                ys.append(None)
-                c = partner_of_a.get(i)
-                partners.append(str(lb[c]) if c is not None else None)
-            for j in range(lb.size):
-                kinds.append("N")
-                sides.append("b")
-                nodes.append(str(lb[j]))
-                ys.append(None)
-                r = partner_of_b.get(j)
-                partners.append(str(la[r]) if r is not None else None)
-            return pd.DataFrame(
-                {
-                    "kind": kinds,
-                    "side": sides,
-                    "node": nodes,
-                    "y": ys,
-                    "partner": partners,
-                    "viol": [None] * len(kinds),
-                }
-            )
-        if la.size + lb.size > MWGM_DENSE_MAX:
-            # sparse exact path: duals come straight from the SSP solver and
-            # already satisfy the matching-LP KKT form the declarative checks
-            # use; ``viol`` counts the node-side conditions only the solver
-            # sees (ya/yb >= 0, exactly 0 on unmatched nodes) — together
-            # with the edge-level feasibility/tightness joins these are the
-            # complete optimality certificate (weak LP duality)
-            ml, ya_, yb_ = _sparse_hungarian_max(
-                ia, ib, s + 1e-9 * jitter, la.size, lb.size
-            )
-            match_of_r = {int(ml[i]): i for i in range(la.size) if ml[i] >= 0}
-            viol = int((ya_ < -eps).sum()) + int((yb_ < -eps).sum())
-            viol += sum(
-                1 for i in range(la.size) if ml[i] < 0 and abs(ya_[i]) > eps
-            )
-            viol += sum(
-                1
-                for j in range(lb.size)
-                if j not in match_of_r and abs(yb_[j]) > eps
-            )
-            kinds, sides, nodes, ys, partners = ["G"], [None], [None], [None], [None]
-            for i in range(la.size):
-                kinds.append("N")
-                sides.append("a")
-                nodes.append(str(la[i]))
-                ys.append(float(ya_[i]))
-                partners.append(str(lb[ml[i]]) if ml[i] >= 0 else None)
-            for j in range(lb.size):
-                kinds.append("N")
-                sides.append("b")
-                nodes.append(str(lb[j]))
-                ys.append(float(yb_[j]))
-                r = match_of_r.get(j)
-                partners.append(str(la[r]) if r is not None else None)
-            return pd.DataFrame(
-                {
-                    "kind": kinds,
-                    "side": sides,
-                    "node": nodes,
-                    "y": ys,
-                    "partner": partners,
-                    "viol": [viol] + [None] * (len(kinds) - 1),
-                }
-            )
-        w = np.zeros((la.size, lb.size))
-        w[ia, ib] = s + 1e-9 * jitter
-        rows, cols, u, v = _hungarian_max(w)
-        n = u.size
-        cost = np.zeros((n, n))
-        cost[: la.size, : lb.size] = -w
-        grid = u[:, None] + v[None, :]
-        viol = int((grid > cost + eps).sum())
-        viol += int((np.abs(grid[rows, cols] - cost[rows, cols]) > eps).sum())
-        col_to_row = np.empty(n, dtype=np.int64)
-        col_to_row[cols] = rows
-        kinds, sides, nodes, ys, partners = ["G"], [None], [None], [None], [None]
-        for i in range(la.size):
-            c = cols[i]
-            matched = c < lb.size and w[i, c] > 0
-            kinds.append("N")
-            sides.append("a")
-            nodes.append(str(la[i]))
-            ys.append(float(-u[i]))
-            partners.append(str(lb[c]) if matched else None)
-        for j in range(lb.size):
-            r = col_to_row[j]
-            matched = r < la.size and w[r, j] > 0
-            kinds.append("N")
-            sides.append("b")
-            nodes.append(str(lb[j]))
-            ys.append(float(-v[j]))
-            partners.append(str(la[r]) if matched else None)
+        la, lb, _, _, _, match_l, ya, yb = _solve_component(pdf, max_component)
+        match_r = np.full(lb.size, -1, dtype=np.int64)
+        matched = np.flatnonzero(match_l >= 0)
+        match_r[match_l[matched]] = matched
+        n = la.size + lb.size
+        kinds = ["N"] * n
+        sides = ["a"] * la.size + ["b"] * lb.size
+        nodes = [str(x) for x in la] + [str(x) for x in lb]
+        ys = [None] * n if ya is None else [float(y) for y in np.r_[ya, yb]]
+        partners = [str(lb[j]) if j >= 0 else None for j in match_l] + [
+            str(la[i]) if i >= 0 else None for i in match_r
+        ]
+        viols = [None] * n
+        if ya is not None:
+            viol = int((ya < -eps).sum()) + int((yb < -eps).sum())
+            viol += int((np.abs(ya[match_l < 0]) > eps).sum())
+            viol += int((np.abs(yb[match_r < 0]) > eps).sum())
+            kinds, sides, nodes = ["G"] + kinds, [None] + sides, [None] + nodes
+            ys, partners, viols = [None] + ys, [None] + partners, [viol] + viols
         return pd.DataFrame(
             {
                 "kind": kinds,
@@ -973,7 +788,7 @@ def mwgm_exact_duals(
                 "node": nodes,
                 "y": ys,
                 "partner": partners,
-                "viol": [viol] + [None] * (len(kinds) - 1),
+                "viol": viols,
             }
         )
 
@@ -983,7 +798,7 @@ def mwgm_exact_duals(
 def mwgm_exact_certificate(
     scored: DataFrame,
     score_col: str = "score",
-    max_component: int = 50_000,
+    max_component: int = MAX_COMPONENT,
     eps: float = 1e-7,
 ) -> DataFrame:
     """One-row LP-optimality-certificate summary for the exact MWGM over
@@ -1001,11 +816,12 @@ def mwgm_exact_certificate(
       feasibility);
     - ``tight_viol`` — matched edges with ``|y_a + y_b − w| > eps``
       (complementary slackness);
-    - ``grid_viol`` — solver-side padded-grid feasibility/tightness
-      violations (see :func:`mwgm_exact_duals`).
+    - ``grid_viol`` — solver-side node conditions: negative duals, and
+      nonzero duals on unmatched nodes (the ``G`` rows of
+      :func:`mwgm_exact_duals`; the name is kept for the oracle's schema).
 
     Together these are exactly the Karush-Kuhn-Tucker conditions of the
-    assignment LP, so a hash-green row certifies optimality without the
+    matching LP, so a hash-green row certifies optimality without the
     oracle replaying the Hungarian.
 
     ``uncertified_edges`` counts edges inside components that exceeded
@@ -1052,7 +868,7 @@ def mwgm_exact_certificate(
             ),
             F.lit(0),
         ).alias("tight_viol"),
-        # NULL duals mark greedy-degraded oversized components; null
+        # NULL duals mark greedy-degraded components; null
         # comparisons above are null -> excluded from the sums, counted here
         F.coalesce(
             F.sum((F.col("y_a").isNull() | F.col("y_b").isNull()).cast("long")),

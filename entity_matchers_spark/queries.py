@@ -248,150 +248,6 @@ def _er_spark_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- query builders ----------------------------------------------------------
 
 
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style aggregation: map-side partial aggregation + one shuffle
-    on the tiny (flag, status) key space."""
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            # Sums accumulate in DECIMAL (exact, order-independent) and the
-            # FINAL value is cast to DOUBLE: the decimal→double conversion is
-            # deterministic and identical in every engine, so the output
-            # hashes stably — raw DECIMAL output rendered differently at the
-            # driver's value-hash layer (trailing-zero scale) two rounds
-            # running despite value-exact rows.
-            F.sum(F.col("l_quantity").cast("decimal(20,2)")).cast("double").alias("sum_qty"),
-            F.sum(F.col("l_extendedprice").cast("decimal(20,2)")).cast("double").alias("sum_base_price"),
-            F.sum(
-                (F.col("l_extendedprice").cast("decimal(20,2)")
-                 * (F.lit(1).cast("decimal(20,2)") - F.col("l_discount").cast("decimal(20,2)")))
-                .cast("decimal(20,4)")
-            ).cast("double").alias("sum_disc_price"),
-            F.count("*").alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-Q_PRICING_SQL = """
-SELECT l_returnflag, l_linestatus,
-  (sum(l_quantity::DECIMAL(20,2))::DECIMAL(30,2))::DOUBLE AS sum_qty,
-  (sum(l_extendedprice::DECIMAL(20,2))::DECIMAL(30,2))::DOUBLE AS sum_base_price,
-  (sum((l_extendedprice::DECIMAL(20,2) * (1::DECIMAL(20,2) - l_discount::DECIMAL(20,2)))::DECIMAL(20,4))::DECIMAL(30,4))::DOUBLE AS sum_disc_price,
-  count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-"""
-
-
-def q_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-style 3-way join; nation/customer are broadcast (small dims)."""
-    cust = _read(spark, sf_dir, "customer")
-    orders = _read(spark, sf_dir, "orders")
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg(
-            # exact DECIMAL accumulation, final cast to DOUBLE for a stable
-            # cross-engine value hash (see q_pricing_summary)
-            F.sum(
-                (F.col("l_extendedprice").cast("decimal(20,2)")
-                 * (F.lit(1).cast("decimal(20,2)") - F.col("l_discount").cast("decimal(20,2)")))
-                .cast("decimal(20,4)")
-            ).cast("double").alias("revenue")
-        )
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
-        .limit(10)
-    )
-
-
-Q_TOP_REVENUE_SQL = """
-SELECT o_orderkey, o_orderdate,
-  (sum((l_extendedprice::DECIMAL(20,2) * (1::DECIMAL(20,2) - l_discount::DECIMAL(20,2)))::DECIMAL(20,4))::DECIMAL(30,4))::DOUBLE AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-GROUP BY o_orderkey, o_orderdate
-ORDER BY revenue DESC, o_orderkey ASC
-LIMIT 10
-"""
-
-
-def q_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group top-k via window (the reference's per-entity top-k pattern,
-    SURVEY.md §2.3)."""
-    from pyspark.sql import Window
-
-    orders = _read(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-    )
-    return (
-        orders.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rnk")
-    )
-
-
-Q_TOP_ORDERS_PER_CUST_SQL = """
-SELECT o_custkey, o_orderkey, o_totalprice, rnk FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-         row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rnk
-  FROM orders
-) WHERE rnk <= 3
-"""
-
-
-def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anti-join (the reference's remove_unlinked / no-triples filters,
-    /root/reference/OpenEA_Mod/src/openea/modules/load/kgs.py:230-261)."""
-    cust = _read(spark, sf_dir, "customer")
-    orders = _read(spark, sf_dir, "orders")
-    return (
-        cust.join(orders, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")
-    )
-
-
-Q_CUST_NO_ORDERS_SQL = """
-SELECT c_custkey, c_name FROM customer
-WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-"""
-
-
-def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window event aggregation (batch form of the streaming path)."""
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            # epoch seconds, not a TIMESTAMP: timestamp rendering at the
-            # driver's value-hash layer differed across engines two rounds
-            # running; an integer is representation-free (session tz is UTC,
-            # matching DuckDB's epoch()).
-            F.date_trunc("hour", F.col("ts")).cast("long").alias("hour_epoch"),
-            F.col("event_type"),
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            # exact DECIMAL accumulation, final deterministic cast to DOUBLE
-            F.sum(F.col("value").cast("decimal(20,6)")).cast("double").alias("sum_value"),
-        )
-    )
-
-
-Q_EVENTS_HOURLY_SQL = """
-SELECT epoch(date_trunc('hour', ts))::BIGINT AS hour_epoch, event_type,
-       count(*) AS n_events, (sum(value::DECIMAL(20,6))::DECIMAL(30,6))::DOUBLE AS sum_value
-FROM events GROUP BY 1, 2
-"""
-
-
 def q_er_block_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocking stage: MinHash-LSH band keys + domain keys (SURVEY.md §2.3)."""
     return _er_spark_blocks(spark, sf_dir)
@@ -2578,7 +2434,7 @@ WHERE tag = 'E' AND iter = (SELECT max(iter) FROM gs)
 
 def q_er_mwgm_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT max-weight bipartite matching (alignment_finder.py:84-140):
-    hash-min CC over candidate edges, then one numpy-Hungarian solve per
+    hash-min CC over candidate edges, then one sparse-Hungarian solve per
     component via applyInPandas. The input is threshold+top-k filtered
     first — exactly the reference's ``find_alignment`` flow
     (alignment_finder.py:28-77 thresholds and keeps k nearest BEFORE
@@ -2586,29 +2442,27 @@ def q_er_mwgm_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Optimality is an optimization objective no SQL engine can replay, so
     the driver-checkable output is the **LP-optimality certificate** (KKT
-    conditions of the assignment LP): the Hungarian's dual potentials are
+    conditions of the matching LP): the Hungarian's dual potentials are
     emitted alongside the matching and joined back to the full candidate
     set, producing one row of input-derived stats (n_edges / n_left /
     n_right / sum_w_q — the oracle recomputes these from the same pruned
     candidate SQL, pinning the certificate to the real input) plus four
     violation counters (matching validity, dual feasibility
     ``y_a + y_b >= w``, complementary slackness on matched edges, and the
-    solver-side padded-grid conditions) that are provably 0 iff the
-    matching is optimal — asserted as constants by the oracle. The
-    matching rows themselves are exactness-tested against brute force in
+    solver-side node conditions: nonnegative duals, zero on unmatched
+    nodes) that are provably 0 iff the matching is optimal — asserted as
+    constants by the oracle. The sparse kernel is tested against a dense
+    reference Hungarian, itself checked by brute force, in
     tests/test_matching_clustering.py.
 
-    Components beyond MWGM_MAX_COMPONENT nodes (the sf0.1 candidate graph
-    grows one) degrade to the greedy 1/2-approx without duals; their edge
+    Components beyond ``matching.MAX_COMPONENT`` nodes degrade to the
+    greedy 1/2-approx without duals; their edge
     count surfaces as ``uncertified_edges``, which the oracle recomputes
     from the component structure (recursive-CTE CC), so the degradation
     is independently checked rather than hidden."""
     scored = _er_spark_scores(spark, sf_dir)
     pruned = matching.topk_per_id(matching.threshold_match(scored, 0.5), 5, "a")
-    return matching.mwgm_exact_certificate(pruned, max_component=MWGM_MAX_COMPONENT)
-
-
-MWGM_MAX_COMPONENT = 50_000
+    return matching.mwgm_exact_certificate(pruned)
 
 
 Q_ER_MWGM_EXACT_SQL = (
@@ -2638,7 +2492,7 @@ Q_ER_MWGM_EXACT_SQL = (
   cc AS MATERIALIZED (SELECT u AS node, least(u, min(v)) AS comp FROM reach GROUP BY u),
   big AS MATERIALIZED (
     SELECT comp FROM (SELECT comp, count(*) AS nodes FROM cc GROUP BY comp)
-    WHERE nodes > {MWGM_MAX_COMPONENT}
+    WHERE nodes > {matching.MAX_COMPONENT}
   ),
   unc AS (
     SELECT count(*) AS n FROM pruned p
@@ -5718,9 +5572,6 @@ QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] 
     "ann_ivf_topk": (q_ann_ivf_topk, Q_ANN_IVF_SQL),
     "neardup_embedding": (q_neardup_embedding, Q_NEARDUP_EMBEDDING_SQL),
     "semdedup": (q_semdedup, Q_SEMDEDUP_SQL),
-    "pricing_summary": (q_pricing_summary, Q_PRICING_SQL),
-    "top_revenue_orders": (q_top_revenue_orders, Q_TOP_REVENUE_SQL),
-    "events_hourly": (q_events_hourly, Q_EVENTS_HOURLY_SQL),
     "pagerank": (q_pagerank, Q_PAGERANK_SQL),
     "topk_jaccard_blocking": (q_topk_jaccard_blocking, Q_TOPK_JACCARD_SQL),
     "er_pairs_salted": (q_er_pairs_salted, Q_ER_PAIRS_SALTED_SQL),
@@ -5764,6 +5615,4 @@ QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] 
     "name_selection": (q_name_selection, Q_NAME_SELECTION_SQL),
     "triples_anonymize": (q_triples_anonymize, Q_TRIPLES_ANONYMIZE_SQL),
     "uri_local_names": (q_uri_local_names, Q_URI_LOCAL_NAMES_SQL),
-    "customers_without_orders": (q_customers_without_orders, Q_CUST_NO_ORDERS_SQL),
-    "top_orders_per_customer": (q_top_orders_per_customer, Q_TOP_ORDERS_PER_CUST_SQL),
 }

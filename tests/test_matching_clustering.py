@@ -275,10 +275,71 @@ def _brute_force_mwgm(edges):
     return best
 
 
-def test_hungarian_max_equals_brute_force():
+def _hungarian_max(weights):
+    """Dense reference for the sparse kernel: exact max-weight assignment
+    on a rectangular weight matrix. Returns (rows, cols, u, v): index
+    arrays of the optimal assignment of the PADDED square problem plus the
+    final dual potentials (0-based, length n = max(shape)) satisfying
+    ``u[i] + v[j] <= -w_padded[i, j]`` everywhere with equality on
+    assignment cells — the LP-optimality certificate. Callers drop pairs
+    with non-positive weight (zero-padded cells = "leave unmatched", valid
+    because every real edge weight is > 0).
+
+    Classic O(n^3) shortest-augmenting-path Hungarian (potentials u/v, one
+    augmentation per row) with the inner column scan vectorized in numpy.
+    """
     import numpy as np
 
-    from entity_matchers_spark.operators.matching import _hungarian_max
+    w = np.asarray(weights, dtype=np.float64)
+    n = max(w.shape)
+    cost = np.zeros((n + 1, n + 1))
+    cost[1 : w.shape[0] + 1, 1 : w.shape[1] + 1] = -w  # maximize -> minimize
+    u = np.zeros(n + 1)
+    v = np.zeros(n + 1)
+    p = np.zeros(n + 1, dtype=np.int64)  # p[j] = row matched to column j
+    way = np.zeros(n + 1, dtype=np.int64)
+    cols = np.arange(n + 1)
+    for i in range(1, n + 1):
+        p[0] = i
+        j0 = 0
+        minv = np.full(n + 1, np.inf)
+        used = np.zeros(n + 1, dtype=bool)
+        while True:
+            used[j0] = True
+            i0 = p[j0]
+            free = ~used
+            free[0] = False
+            cur = cost[i0, free] - u[i0] - v[free]
+            sub = minv[free]
+            upd = cur < sub
+            minv[free] = np.where(upd, cur, sub)
+            wayf = way[free]
+            wayf[upd] = j0
+            way[free] = wayf
+            fidx = cols[free]
+            if fidx.size == 0:
+                break
+            k = np.argmin(minv[free])
+            j1 = int(fidx[k])
+            delta = minv[j1]
+            u[p[used]] += delta
+            v[used] -= delta
+            minv[~used] -= delta
+            j0 = j1
+            if p[j0] == 0:
+                break
+        while j0 != 0:
+            j1 = way[j0]
+            p[j0] = p[j1]
+            j0 = j1
+    rows = np.empty(n, dtype=np.int64)
+    rows[p[1:] - 1] = cols[1:] - 1
+    # rows[r] = column assigned to row r
+    return np.arange(n), rows, u[1:], v[1:]
+
+
+def test_hungarian_max_equals_brute_force():
+    import numpy as np
 
     rng = np.random.RandomState(7)
     for trial in range(60):
@@ -306,9 +367,11 @@ def test_hungarian_max_equals_brute_force():
         assert abs(got - want) < 1e-9, (trial, got, want, w)
 
 
-def test_mwgm_exact_spark(spark):
+@pytest.mark.parametrize("ids", ["str", "int"])
+def test_mwgm_exact_spark(spark, ids):
     """Exact per-component matching beats/equals greedy and matches brute
-    force on a multi-component candidate graph."""
+    force on a multi-component candidate graph. Integer ids take the
+    2a / 2b+1 long node encoding that the registry and er_align use."""
     from entity_matchers_spark.operators.matching import mwgm_exact
 
     # component 1: greedy (mutual-best first) is suboptimal:
@@ -322,17 +385,19 @@ def test_mwgm_exact_spark(spark):
         ("a3", "b3", 0.5),
         ("a4", "b3", 0.4),
     ]
+    want = {("a1", "b2"), ("a2", "b1"), ("a3", "b3")}
+    if ids == "int":
+        rows = [(int(a[1:]), int(b[1:]), w) for a, b, w in rows]
+        want = {(int(a[1:]), int(b[1:])) for a, b in want}
     scored = spark.createDataFrame(rows, ["id_a", "id_b", "score"])
     got = {(r.id_a, r.id_b) for r in mwgm_exact(scored).collect()}
-    assert got == {("a1", "b2"), ("a2", "b1"), ("a3", "b3")}
+    assert got == want
 
 
 def test_mwgm_exact_oversize_greedy_fallback(spark):
     """Components above max_component degrade to the in-component greedy
     1/2-approx (valid matching, deterministic) instead of aborting the
-    job; oversize="raise" restores the strict behavior."""
-    import pytest
-
+    job."""
     from entity_matchers_spark.operators.matching import mwgm_exact
 
     # one 6-node component (> max_component=4) + a small exact one
@@ -362,8 +427,6 @@ def test_mwgm_exact_oversize_greedy_fallback(spark):
         for r in mwgm_exact(scored, max_component=4).collect()
     )
     assert again == got
-    with pytest.raises(Exception):
-        mwgm_exact(scored, max_component=4, oversize="raise").collect()
 
 
 def test_stable_marriage_adversarial_chain(spark):
@@ -438,8 +501,13 @@ def test_mwgm_exact_certificate(spark):
 def test_mwgm_certificate_oversized_degrades_uncertified(spark):
     """Components beyond max_component greedy-degrade: their edges are
     counted as uncertified (never as violations), small components stay
-    fully certified, and the output is still a valid matching."""
-    from entity_matchers_spark.operators.matching import mwgm_exact_certificate
+    fully certified, and the output is still a valid matching — the one
+    mwgm_exact emits, on the greedy component too."""
+    from entity_matchers_spark.operators.matching import (
+        mwgm_exact,
+        mwgm_exact_certificate,
+        mwgm_exact_duals,
+    )
 
     rows = [
         # 6-node component (oversized at max_component=4)
@@ -456,6 +524,13 @@ def test_mwgm_certificate_oversized_degrades_uncertified(spark):
     assert r.n_edges == 6
     assert r.uncertified_edges == 5  # the whole big component
     assert (r.validity_viol, r.feas_viol, r.tight_viol, r.grid_viol) == (0, 0, 0, 0)
+    nodes = mwgm_exact_duals(scored, max_component=4).where(
+        (F.col("kind") == "N") & F.col("partner").isNotNull()
+    )
+    from_a = {(x.node, x.partner) for x in nodes.where(F.col("side") == "a").collect()}
+    from_b = {(x.partner, x.node) for x in nodes.where(F.col("side") == "b").collect()}
+    want = {(x.id_a, x.id_b) for x in mwgm_exact(scored, max_component=4).collect()}
+    assert from_a == from_b == want == {("a1", "b1"), ("a2", "b3"), ("a4", "b4")}
 
 
 def test_mwgm_certificate_detects_bad_duals(spark):
@@ -648,10 +723,7 @@ def test_sparse_hungarian_equals_dense_with_kkt_duals():
     and exact zero on unmatched nodes."""
     import numpy as np
 
-    from entity_matchers_spark.operators.matching import (
-        _hungarian_max,
-        _sparse_hungarian_max,
-    )
+    from entity_matchers_spark.operators.matching import _sparse_hungarian_max
 
     rng = np.random.RandomState(11)
     for trial in range(120):
@@ -687,10 +759,10 @@ def test_sparse_hungarian_equals_dense_with_kkt_duals():
         assert len(matched_r) == int((ml >= 0).sum()), trial
 
 
-def test_mwgm_exact_sparse_path_matches_dense(spark, monkeypatch):
-    """Forcing MWGM_DENSE_MAX to 0 routes every component through the
-    sparse kernel; matching and certificate must be identical to the dense
-    path (same optimum, all KKT counters zero, nothing uncertified)."""
+def test_mwgm_exact_sparse_kernel_optimum_certified(spark):
+    """Every component goes through the sparse kernel: the matching is the
+    exact optimum (greedy would lock in a1-b1 and a5-b5) and its
+    certificate holds (all KKT counters zero, nothing uncertified)."""
     from entity_matchers_spark.operators import matching
 
     rows = [
@@ -705,10 +777,8 @@ def test_mwgm_exact_sparse_path_matches_dense(spark, monkeypatch):
         ("a6", "b6", 0.1),
     ]
     scored = spark.createDataFrame(rows, ["id_a", "id_b", "score"])
-    dense = {(r.id_a, r.id_b) for r in matching.mwgm_exact(scored).collect()}
-    monkeypatch.setattr(matching, "MWGM_DENSE_MAX", 0)
-    sparse = {(r.id_a, r.id_b) for r in matching.mwgm_exact(scored).collect()}
-    assert sparse == dense == {
+    got = {(r.id_a, r.id_b) for r in matching.mwgm_exact(scored).collect()}
+    assert got == {
         ("a1", "b2"), ("a2", "b1"), ("a3", "b3"), ("a5", "b6"), ("a6", "b5")
     }
     [c] = matching.mwgm_exact_certificate(scored).collect()
@@ -727,10 +797,7 @@ def test_sparse_hungarian_adversarial_shapes():
     nodes. Dual feasibility must hold throughout."""
     import numpy as np
 
-    from entity_matchers_spark.operators.matching import (
-        _hungarian_max,
-        _sparse_hungarian_max,
-    )
+    from entity_matchers_spark.operators.matching import _sparse_hungarian_max
 
     rng = np.random.RandomState(23)
     for trial in range(60):

@@ -3,13 +3,10 @@
 queries and assert the plan properties that matter at 100 TB.
 
 Checks per query (where applicable):
-- parquet scans show a pruned ReadSchema (no SELECT-* scans);
-- the scoring joins broadcast the per-doc feature side (docs are the small
-  side only at test scale — on a cluster AQE flips this to sort-merge; the
-  audit asserts *some* join strategy was chosen by stats, i.e. no
-  CartesianProduct outside the intended ANN crossJoin);
+- some join strategy was chosen by stats, i.e. no CartesianProduct outside
+  the intended ANN crossJoin;
 - whole-stage codegen covers the native expression pipeline;
-- no Exchange directly feeding another Exchange (redundant shuffle).
+- layout queries stay within their ``Exchange SinglePartition`` budget.
 
 Writes PLANS.md with the formatted plans and prints one line per check.
 """
@@ -24,7 +21,6 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HEADLINE = [
-    "pricing_summary",
     "er_block_keys",
     "er_candidate_pairs",
     "er_pair_scores",
@@ -132,14 +128,6 @@ def audit(name: str, plan: str) -> list[str]:
         # an already-materialized batch relation; the work ran upstream
     ):
         problems.append("no whole-stage codegen span")
-    if "PushedFilters: []" in plan and "Filter (" in plan and name == "pricing_summary":
-        problems.append("filter not pushed to scan")
-    if name == "pricing_summary" and "ReadSchema" in plan:
-        # column pruning: the 16-column lineitem scan must read only what
-        # the aggregation needs
-        read = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-        if read and read[0].count(",") > 8:
-            problems.append(f"scan reads too many columns: {read[0].strip()}")
     budget = _SINGLE_PARTITION_BUDGET.get(name)
     if budget is not None:
         got = plan.count("Exchange SinglePartition")
