@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship record-linkage query (blocking →
-pairwise scoring → mutual-best → connected components) on the sf0.001
+pairwise scoring → threshold match → connected components) on the sf0.001
 documents table. ``queries()`` / ``oracle_sql()`` expose every implemented
 operator from SURVEY.md §2 with a DuckDB-verifiable oracle.
 """

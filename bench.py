@@ -252,18 +252,14 @@ def _probe_scoring(master: str, sf_dir: str, repeats: int) -> dict:
     from pyspark.sql import functions as F
 
     from entity_matchers_spark import queries as Q
-    from entity_matchers_spark.operators import blocking
-    from entity_matchers_spark.operators.scoring import score_pairs
     from entity_matchers_spark.session import get_spark
 
     spark = get_spark(app_name=f"bench-probe-{master}", master=master)
     from entity_matchers_spark.session import warmup_python_workers
 
     warmup_python_workers(spark)
-    docs = Q._docs(spark, sf_dir)
-    blocks = Q._er_spark_blocks(spark, sf_dir)
-    pairs = blocking.candidate_pairs(blocks, max_block_size=Q.ER_CAP)
-    pairs = pairs.localCheckpoint(eager=True)
+    docs = Q._er_docs(spark, sf_dir)
+    pairs = Q._er_spark_pairs(spark, sf_dir)
     n_pairs = pairs.count()
 
     # Replicate the candidate set until the timed region is compute-dominated:
@@ -279,11 +275,11 @@ def _probe_scoring(master: str, sf_dir: str, repeats: int) -> dict:
     big = pairs.withColumn(
         "rep", F.explode(F.array(*[F.lit(i) for i in range(factor)]))
     ).drop("rep")
-    scored = score_pairs(big, docs, id_col="doc_id")
+    scored = Q.SPEC.scores(big, docs)
     total_pairs = n_pairs * factor
 
     # warm-up on a small slice: JIT, codegen, Python worker pool
-    _materialize(score_pairs(pairs.limit(5000), docs, id_col="doc_id"))
+    _materialize(Q.SPEC.scores(pairs.limit(5000), docs))
     # Each repeat is timed SEPARATELY and the best (fastest) pass is the
     # level's throughput. Measured on this host: back-to-back identical
     # 16-core passes swing 56-121 s (neighbor steal, visible in /proc/stat)

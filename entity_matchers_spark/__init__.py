@@ -3,7 +3,7 @@
 Re-expresses the query/data-processing capabilities of epfl-dlab/entity-matchers
 (reference at /root/reference, studied in SURVEY.md) as an idiomatic Spark
 DataFrame pipeline: blocking (MinHash-LSH + normalized URL-domain keys) →
-pairwise scoring (vectorized pandas/Arrow UDFs) → mutual-best match decision →
+pairwise scoring (vectorized pandas/Arrow UDFs) → thresholded match decision →
 transitive clustering (iterative hash-min connected components) → set-based
 P/R/F1 evaluation — plus the training-data-pipeline operator families a
 100 TB corpus needs: deduplication (exact / MinHash-LSH / SimHash / n-gram

@@ -33,9 +33,14 @@ from entity_matchers_spark.operators import blocking, clustering, matching, scor
 
 @dataclass
 class PipelineConfig:
-    # The registry blocks with the same blocking.minhash_block_keys but
-    # queries.ER_BANDS = 8 bands, the value its oracle SQL is generated
-    # from. The pipeline keeps 16: the er_fresh F1 pins were recorded at 16.
+    """The one spec of the ER chain, and its builder.
+
+    The pipeline stages, the registry's ER queries and their DuckDB oracles,
+    the bench scoring probe and the plan audit all build blocks → pairs →
+    scores → matches → clusters from these fields through these methods.
+    The chain's input is docs with ``id``, ``text`` and ``domain``.
+    """
+
     num_bands: int = 16
     rows_per_band: int = 2
     shingle_n: int = 3
@@ -48,6 +53,46 @@ class PipelineConfig:
         default_factory=lambda: dict(scoring.DEFAULT_WEIGHTS)
     )
     format: str = "parquet"  # "iceberg" on a cluster with the runtime jar
+
+    def minhash_keys(self, docs: DataFrame) -> DataFrame:
+        """(id, block_id): MinHash-LSH band keys over ``text``."""
+        return blocking.minhash_block_keys(
+            docs, "id", "text",
+            num_bands=self.num_bands, rows_per_band=self.rows_per_band,
+            shingle_n=self.shingle_n, text_cap=self.text_cap, seed=self.seed,
+        )
+
+    def blocks(self, docs: DataFrame) -> DataFrame:
+        """MinHash band keys plus one domain key per doc with a non-empty
+        ``domain``."""
+        return self.minhash_keys(docs).unionByName(domain_keys(docs))
+
+    def pairs(self, blocks: DataFrame) -> DataFrame:
+        return blocking.candidate_pairs(blocks, self.max_block_size)
+
+    def scores(self, pairs: DataFrame, docs: DataFrame) -> DataFrame:
+        return scoring.score_pairs(
+            pairs, docs, "id", "text", name_cap=self.name_cap, weights=self.weights
+        )
+
+    def matches(self, scores: DataFrame) -> DataFrame:
+        # Clustering needs ALL above-threshold edges, not a 1-1 matching:
+        # mutual-best (the reference's two-KG alignment rule) would keep
+        # at most one edge per page and cap clusters at size 2. The
+        # calibrated threshold is the match decision; CC adds transitivity.
+        return matching.threshold_match(scores, self.edge_threshold)
+
+    def clusters(self, docs: DataFrame, matches: DataFrame) -> DataFrame:
+        """(id, cluster_id) for every doc: connected components of the
+        matches, unmatched docs as singletons."""
+        return clustering.clusters_with_singletons(docs, matches)
+
+
+def domain_keys(docs: DataFrame) -> DataFrame:
+    """(id, block_id) = ``dom:<domain>``; docs with an empty domain get none."""
+    return docs.select(
+        "id", F.concat(F.lit("dom:"), F.col("domain")).alias("block_id")
+    ).where(F.col("block_id") != "dom:")
 
 
 class CheckpointedPipeline:
@@ -109,30 +154,19 @@ class CheckpointedPipeline:
                 F.col("page_id").alias("id"), "url", "warc_ts", "lang",
                 F.col("extracted_text").alias("text"),
             )
-        docs = self.read("extract")
+        docs = self.read("extract").select(
+            "id", "text", blocking.normalized_domain("url").alias("domain")
+        )
         if stage == "blocks":
-            mh = blocking.minhash_block_keys(
-                docs, "id", "text",
-                num_bands=c.num_bands, rows_per_band=c.rows_per_band,
-                shingle_n=c.shingle_n, text_cap=c.text_cap, seed=c.seed,
-            )
-            dom = blocking.domain_block_keys(docs, "id", "url")
-            return mh.unionByName(dom)
+            return c.blocks(docs)
         if stage == "pairs":
-            return blocking.candidate_pairs(self.read("blocks"), c.max_block_size)
+            return c.pairs(self.read("blocks"))
         if stage == "scores":
-            return scoring.score_pairs(
-                self.read("pairs"), docs, "id", "text",
-                name_cap=c.name_cap, weights=c.weights,
-            )
+            return c.scores(self.read("pairs"), docs)
         if stage == "matches":
-            # Clustering needs ALL above-threshold edges, not a 1-1 matching:
-            # mutual-best (the reference's two-KG alignment rule) would keep
-            # at most one edge per page and cap clusters at size 2. The
-            # calibrated threshold is the match decision; CC adds transitivity.
-            return matching.threshold_match(self.read("scores"), c.edge_threshold)
+            return c.matches(self.read("scores"))
         if stage == "clusters":
-            return clustering.clusters_with_singletons(docs, self.read("matches"))
+            return c.clusters(docs, self.read("matches"))
         raise ValueError(f"unknown stage {stage}")
 
     # -- public API ---------------------------------------------------------

@@ -20,16 +20,13 @@ from entity_matchers_spark.functions.hashing import (
 )
 from entity_matchers_spark.functions.shingles import hashed_shingles, tokens
 from entity_matchers_spark.operators import blocking, clustering, matching, scoring
+from entity_matchers_spark.plans.pipeline import PipelineConfig, domain_keys
 
-# ---------------------------------------------------------------------------
-# shared ER-on-documents config (documents table stands in for web_pages:
-# doc_id ~ page id, text ~ extracted text, source ~ domain key)
-
-ER_BANDS = 8
-ER_ROWS = 2
-ER_SEED = 11037
-ER_CAP = 64
-ER_EDGE_THRESHOLD = 0.8
+# The ER chain's spec: the registry's ER queries and their oracles block,
+# score, match and cluster exactly as the pipeline does. The documents table
+# stands in for web pages (doc_id ~ page id, text ~ extracted text,
+# source ~ domain).
+SPEC = PipelineConfig()
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -79,7 +76,7 @@ def _doc_grams7(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- SQL oracle fragments ---------------------------------------------------
 
 
-def _sig_sql_entries(num_perm: int, seed: int = ER_SEED) -> list[str]:
+def _sig_sql_entries(num_perm: int, seed: int = SPEC.seed) -> list[str]:
     """DuckDB expressions for each MinHash permutation over a ``grams`` list
     column — same (a, b, p) constants the Spark plan embeds."""
     p = MINHASH_PRIME
@@ -91,45 +88,71 @@ def _sig_sql_entries(num_perm: int, seed: int = ER_SEED) -> list[str]:
     return entries
 
 
-def _er_blocks_sql() -> str:
-    """(id, block_id) CTE body: MinHash band keys + source-domain keys."""
-    sig = ",\n      ".join(_sig_sql_entries(ER_BANDS * ER_ROWS))
-    band_exprs = []
-    for band in range(ER_BANDS):
-        cells = " || ".join(
-            f"s[{band * ER_ROWS + r + 1}] || '-'" for r in range(ER_ROWS)
-        )
-        band_exprs.append(f"SELECT id, 'mh:{band}:' || {cells} AS block_id FROM sig")
-    mh = "\n    UNION ALL\n    ".join(band_exprs)
+def _minhash_keys_sql(n: int, grams: str, prefix: str = "") -> str:
+    """CTEs ``grams`` (id, distinct hashed char-n-gram list of the capped,
+    lowercased text), ``{grams}_sig`` and ``{grams}_keys`` (id, block_id):
+    the oracle of ``blocking.minhash_block_keys`` at the spec's bands, rows,
+    seed and text cap, with ``prefix`` on every key."""
+    rows = SPEC.rows_per_band
+    sig = ",\n      ".join(_sig_sql_entries(SPEC.num_bands * rows))
+    keys = ",\n      ".join(
+        f"'{prefix}mh:{band}:' || "
+        + " || ".join(f"s[{band * rows + r + 1}] || '-'" for r in range(rows))
+        for band in range(SPEC.num_bands)
+    )
     return f"""
-  grams_t AS MATERIALIZED (
+  {grams} AS MATERIALIZED (
     SELECT doc_id AS id,
-           list_distinct([('0x'||substr(md5(substr(t, i, 3)),1,8))::UBIGINT::BIGINT
-                          for i in range(1, len(t)-1)]) AS grams
-    FROM (SELECT doc_id, lower(substr(text, 1, 300)) AS t FROM documents)
+           list_distinct([('0x'||substr(md5(substr(t, i, {n})),1,8))::UBIGINT::BIGINT
+                          for i in range(1, len(t) - {n} + 2)]) AS grams
+    FROM (SELECT doc_id, lower(substr(text, 1, {SPEC.text_cap})) AS t FROM documents)
   ),
-  sig AS MATERIALIZED (
+  {grams}_sig AS MATERIALIZED (
     SELECT id, [
       {sig}
-    ] AS s FROM grams_t
+    ] AS s FROM {grams}
   ),
+  {grams}_keys AS MATERIALIZED (
+    SELECT id, unnest([
+      {keys}
+    ]) AS block_id FROM {grams}_sig
+  )"""
+
+
+# oracle of pipeline.domain_keys over documents (source ~ domain)
+_DOMAIN_KEYS_SQL = (
+    "SELECT doc_id AS id, 'dom:' || source AS block_id FROM documents WHERE source <> ''"
+)
+
+
+def _er_blocks_sql() -> str:
+    """CTEs ending in ``blocks`` (id, block_id): the oracle of
+    ``SPEC.blocks``. Its ``grams_t`` gram sets also feed jac3 in
+    ``_er_scores_sql``."""
+    return f"""{_minhash_keys_sql(SPEC.shingle_n, "grams_t")},
   blocks AS MATERIALIZED (
-    {mh}
+    SELECT id, block_id FROM grams_t_keys
     UNION ALL
-    SELECT doc_id AS id, 'dom:' || source AS block_id FROM documents
+    {_DOMAIN_KEYS_SQL}
   )
 """
 
 
-def _er_pairs_sql() -> str:
-    """Capped, deduped candidate pairs CTE (requires _er_blocks_sql CTEs)."""
+def _er_capped_sql() -> str:
+    """``capped`` CTE: blocks minus those above the spec's size cap."""
     return f"""
   capped AS MATERIALIZED (
     SELECT b.* FROM blocks b
     WHERE b.block_id NOT IN (
-      SELECT block_id FROM blocks GROUP BY block_id HAVING count(*) > {ER_CAP}
+      SELECT block_id FROM blocks GROUP BY block_id HAVING count(*) > {SPEC.max_block_size}
     )
-  ),
+  )"""
+
+
+def _er_pairs_sql() -> str:
+    """Capped, deduped candidate pairs CTE (requires _er_blocks_sql CTEs):
+    the oracle of ``SPEC.pairs``."""
+    return f"""{_er_capped_sql()},
   pairs AS MATERIALIZED (
     SELECT DISTINCT l.id AS id_a, r.id AS id_b
     FROM capped l JOIN capped r USING (block_id)
@@ -146,11 +169,11 @@ _TSLR_CANON = (
 
 def _er_scores_sql() -> str:
     """Scored pairs CTE (requires blocks + pairs CTEs): the oracle of
-    ``scoring.score_pairs``, built from that module's caps, vector dim and
-    blend weights."""
+    ``SPEC.scores``, built from the spec's name cap and blend weights and
+    ``scoring``'s canon cap and vector dim."""
     canon_a = f"substr({_TSLR_CANON.format(c='da.text')}, 1, {scoring.TSLR_CAP})"
     canon_b = f"substr({_TSLR_CANON.format(c='db.text')}, 1, {scoring.TSLR_CAP})"
-    blend = " + ".join(f"{k} * {v!r}" for k, v in scoring.DEFAULT_WEIGHTS.items())
+    blend = " + ".join(f"{k} * {v!r}" for k, v in SPEC.weights.items())
     return f"""
   tok_b AS MATERIALIZED (
     SELECT id, b, count(*)::DOUBLE AS c FROM (
@@ -172,8 +195,8 @@ def _er_scores_sql() -> str:
   ),
   scored AS MATERIALIZED (
     SELECT pairs.id_a AS id_a, pairs.id_b AS id_b,
-      jaro_winkler_similarity(lower(substr(da.text, 1, {scoring.NAME_CAP})),
-                              lower(substr(db.text, 1, {scoring.NAME_CAP}))) AS jw,
+      jaro_winkler_similarity(lower(substr(da.text, 1, {SPEC.name_cap})),
+                              lower(substr(db.text, 1, {SPEC.name_cap}))) AS jw,
       CASE WHEN {canon_a} = {canon_b} THEN 1.0
            WHEN greatest(len({canon_a}), len({canon_b})) = 0 THEN 1.0
             ELSE 1.0 - levenshtein({canon_a}, {canon_b})
@@ -199,47 +222,92 @@ def _er_scores_sql() -> str:
 """
 
 
+def _mutual_best_sql(src: str, ka: str, kb: str, score: str, out: str) -> str:
+    """CTE fragment: mutual-best pairs of ``src`` on (ka, kb) by ``score``
+    with ascending-partner tie-breaks (matching.best_per_side order)."""
+    return f"""
+  {out}_ba AS (SELECT {ka}, {kb} FROM (
+    SELECT {ka}, {kb}, row_number() OVER (PARTITION BY {ka} ORDER BY {score} DESC, {kb} ASC) AS rn
+    FROM {src}) WHERE rn = 1),
+  {out}_bb AS (SELECT {ka}, {kb} FROM (
+    SELECT {ka}, {kb}, row_number() OVER (PARTITION BY {kb} ORDER BY {score} DESC, {ka} ASC) AS rn
+    FROM {src}) WHERE rn = 1),
+  {out} AS MATERIALIZED (
+    SELECT s.* FROM {src} s
+    JOIN {out}_ba USING ({ka}, {kb}) JOIN {out}_bb USING ({ka}, {kb})
+  )"""
+
+
+def _doc_components_sql(edges: str, out: str, label: str) -> str:
+    """CTEs ending in ``out`` (doc_id, ``label``): connected components of
+    the ``edges`` query's (id_a, id_b) graph labelled by min id, every other
+    document a singleton — the oracle of ``clustering.clusters_with_singletons``
+    (needs WITH RECURSIVE)."""
+    return f"""
+  {out}_edges AS ({edges}),
+  {out}_und AS (
+    SELECT id_a AS u, id_b AS v FROM {out}_edges
+    UNION SELECT id_b AS u, id_a AS v FROM {out}_edges
+  ),
+  {out}_reach(u, v) AS (
+    SELECT u, v FROM {out}_und
+    UNION
+    SELECT r.u, n.v FROM {out}_reach r JOIN {out}_und n ON r.v = n.u
+  ),
+  {out}_cc AS (SELECT u AS id, least(u, min(v)) AS cc FROM {out}_reach GROUP BY u),
+  {out} AS MATERIALIZED (
+    SELECT d.doc_id, coalesce(c.cc, d.doc_id) AS {label}
+    FROM documents d LEFT JOIN {out}_cc c ON d.doc_id = c.id
+  )"""
+
+
+# The whole ER chain as oracle CTEs: ``blocks``, ``pairs``, ``final_scored``
+# and ``clusters`` (doc_id, cluster_id), the oracle of SPEC.clusters over
+# SPEC.matches — every edge scored at or above the spec's threshold.
+_ER_CLUSTERS_SQL = (
+    f"WITH RECURSIVE {_er_blocks_sql()}, {_er_pairs_sql()}, {_er_scores_sql()}, "
+    + _doc_components_sql(
+        f"SELECT id_a, id_b FROM final_scored WHERE score >= {SPEC.edge_threshold}",
+        "clusters", "cluster_id",
+    )
+)
+
+
+def _er_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents as the ER chain's input (id, text, domain)."""
+    return _docs(spark, sf_dir).select(
+        F.col("doc_id").alias("id"), "text", F.col("source").alias("domain")
+    )
+
+
 def _er_spark_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    mh = blocking.minhash_block_keys(
-        docs, id_col="doc_id", text_col="text",
-        num_bands=ER_BANDS, rows_per_band=ER_ROWS, seed=ER_SEED,
-    )
-    dom = docs.select(
-        F.col("doc_id").alias("id"),
-        F.concat(F.lit("dom:"), F.col("source")).alias("block_id"),
-    )
-    return mh.unionByName(dom)
+    return SPEC.blocks(_er_docs(spark, sf_dir))
 
 
 def _er_spark_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _er_cached(
-        spark, sf_dir, "pairs",
-        lambda: blocking.candidate_pairs(_er_spark_blocks(spark, sf_dir), max_block_size=ER_CAP),
+        spark, sf_dir, "pairs", lambda: SPEC.pairs(_er_spark_blocks(spark, sf_dir))
     )
 
 
 def _er_spark_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _er_cached(
         spark, sf_dir, "scores",
-        lambda: scoring.score_pairs(
-            _er_spark_pairs(spark, sf_dir), _docs(spark, sf_dir), id_col="doc_id"
-        ),
+        lambda: SPEC.scores(_er_spark_pairs(spark, sf_dir), _er_docs(spark, sf_dir)),
     )
 
 
 def _er_spark_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cached (doc_id, cluster_id) transitive clusters of the mutual-best
-    thresholded edges. Four registry queries (er_clusters, er_cluster_eval,
+    """Cached (doc_id, cluster_id) transitive clusters of every edge scored
+    at or above the spec's threshold — the pipeline's clusters stage. Five
+    registry queries (er_clusters, er_cluster_eval, cluster_split,
     golden_records, er_bcubed) consume the IDENTICAL clustering; running the
     iterative hash-min CC once and checkpointing mirrors how a production
     pipeline materializes the cluster table a single time for every
     downstream consumer."""
     def build() -> DataFrame:
-        scored = _er_spark_scores(spark, sf_dir)
-        edges = matching.mutual_best(scored, min_score=ER_EDGE_THRESHOLD).select("id_a", "id_b")
-        docs = _docs(spark, sf_dir)
-        return clustering.clusters_with_singletons(docs, edges, id_col="doc_id").select(
+        matches = SPEC.matches(_er_spark_scores(spark, sf_dir))
+        return SPEC.clusters(_er_docs(spark, sf_dir), matches).select(
             F.col("id").alias("doc_id"), "cluster_id"
         )
     return _er_cached(spark, sf_dir, "clusters", build)
@@ -264,42 +332,19 @@ def q_er_block_keys_2gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     n=2). Keys carry a ``g2:`` prefix so a user unioning both variants
     (the reference's actual setup) cannot collide band keys across gram
     sizes."""
-    docs = _docs(spark, sf_dir)
     mh2 = blocking.minhash_block_keys(
-        docs, id_col="doc_id", text_col="text",
-        num_bands=ER_BANDS, rows_per_band=ER_ROWS, shingle_n=2, seed=ER_SEED,
+        _docs(spark, sf_dir), id_col="doc_id", text_col="text",
+        num_bands=SPEC.num_bands, rows_per_band=SPEC.rows_per_band, shingle_n=2,
+        text_cap=SPEC.text_cap, seed=SPEC.seed,
     )
     return mh2.select(
         "id", F.concat(F.lit("g2:"), F.col("block_id")).alias("block_id")
     )
 
 
-def _er_blocks_2gram_sql() -> str:
-    sig = ",\n      ".join(_sig_sql_entries(ER_BANDS * ER_ROWS))
-    band_exprs = []
-    for band in range(ER_BANDS):
-        cells = " || ".join(
-            f"s[{band * ER_ROWS + r + 1}] || '-'" for r in range(ER_ROWS)
-        )
-        band_exprs.append(f"SELECT id, 'g2:mh:{band}:' || {cells} AS block_id FROM sig")
-    mh = "\n  UNION ALL\n  ".join(band_exprs)
-    return f"""
-WITH grams_t AS MATERIALIZED (
-  SELECT doc_id AS id,
-         list_distinct([('0x'||substr(md5(substr(t, i, 2)),1,8))::UBIGINT::BIGINT
-                        for i in range(1, len(t))]) AS grams
-  FROM (SELECT doc_id, lower(substr(text, 1, 300)) AS t FROM documents)
-),
-sig AS MATERIALIZED (
-  SELECT id, [
-    {sig}
-  ] AS s FROM grams_t
+Q_ER_BLOCK_KEYS_2GRAM_SQL = (
+    f"WITH {_minhash_keys_sql(2, 'grams_2', 'g2:')} SELECT id, block_id FROM grams_2_keys"
 )
-{mh}
-"""
-
-
-Q_ER_BLOCK_KEYS_2GRAM_SQL = _er_blocks_2gram_sql()
 
 
 def q_er_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -333,73 +378,26 @@ def q_er_mutual_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q_ER_MUTUAL_BEST_SQL = (
     f"WITH {_er_blocks_sql()}, {_er_pairs_sql()}, {_er_scores_sql()}, "
-    """
-  best_a AS (
-    SELECT id_a, id_b FROM (
-      SELECT id_a, id_b,
-             row_number() OVER (PARTITION BY id_a ORDER BY score DESC, id_b ASC) AS rn
-      FROM final_scored) WHERE rn = 1
-  ),
-  best_b AS (
-    SELECT id_a, id_b FROM (
-      SELECT id_a, id_b,
-             row_number() OVER (PARTITION BY id_b ORDER BY score DESC, id_a ASC) AS rn
-      FROM final_scored) WHERE rn = 1
-  )
-SELECT s.id_a, s.id_b, s.score
-FROM final_scored s
-JOIN best_a USING (id_a, id_b)
-JOIN best_b USING (id_a, id_b)
-"""
+    + _mutual_best_sql("final_scored", "id_a", "id_b", "score", "mutual")
+    + "\nSELECT id_a, id_b, score FROM mutual"
 )
 
 
 def q_er_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transitive clustering: hash-min connected components over thresholded
-    mutual-best edges; unmatched docs are singletons."""
+    """Transitive clustering: hash-min connected components over every edge
+    scored at or above the calibrated threshold; unmatched docs are
+    singletons."""
     return _er_spark_clusters(spark, sf_dir)
 
 
-Q_ER_CLUSTERS_SQL = (
-    f"WITH RECURSIVE {_er_blocks_sql()}, {_er_pairs_sql()}, {_er_scores_sql()}, "
-    f"""
-  thresholded AS (SELECT * FROM final_scored WHERE score >= {ER_EDGE_THRESHOLD}),
-  best_a AS (
-    SELECT id_a, id_b FROM (
-      SELECT id_a, id_b,
-             row_number() OVER (PARTITION BY id_a ORDER BY score DESC, id_b ASC) AS rn
-      FROM thresholded) WHERE rn = 1
-  ),
-  best_b AS (
-    SELECT id_a, id_b FROM (
-      SELECT id_a, id_b,
-             row_number() OVER (PARTITION BY id_b ORDER BY score DESC, id_a ASC) AS rn
-      FROM thresholded) WHERE rn = 1
-  ),
-  edges AS (
-    SELECT s.id_a, s.id_b FROM thresholded s
-    JOIN best_a USING (id_a, id_b) JOIN best_b USING (id_a, id_b)
-  ),
-  und AS (
-    SELECT id_a AS u, id_b AS v FROM edges
-    UNION SELECT id_b AS u, id_a AS v FROM edges
-  ),
-  reach(u, v) AS (
-    SELECT u, v FROM und
-    UNION
-    SELECT r.u, n.v FROM reach r JOIN und n ON r.v = n.u
-  ),
-  cc AS (SELECT u AS id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u)
-SELECT d.doc_id, coalesce(cc.cluster_id, d.doc_id) AS cluster_id
-FROM documents d LEFT JOIN cc ON d.doc_id = cc.id
-"""
-)
+Q_ER_CLUSTERS_SQL = f"{_ER_CLUSTERS_SQL}\nSELECT doc_id, cluster_id FROM clusters"
 
 
 def q_er_cluster_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise P/R/F1 of the transitive clusters vs the derived truth set
-    — evaluates the CLUSTERING (same-cluster pairs incl. transitive ones),
-    complementing er_eval_prf1's alignment-level check."""
+    """Pairwise P/R/F1 of the transitive clusters (every edge at or above
+    the calibrated threshold) vs the derived truth set — evaluates the
+    CLUSTERING (same-cluster pairs incl. transitive ones), complementing
+    er_eval_prf1's alignment-level check."""
     from entity_matchers_spark.operators.evaluation import pairwise_f1_from_clusters
 
     scored = _er_spark_scores(spark, sf_dir)
@@ -408,17 +406,7 @@ def q_er_cluster_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairwise_f1_from_clusters(clusters, truth, id_col="doc_id")
 
 
-Q_ER_CLUSTER_EVAL_SQL = (
-    Q_ER_CLUSTERS_SQL.replace(
-        """
-SELECT d.doc_id, coalesce(cc.cluster_id, d.doc_id) AS cluster_id
-FROM documents d LEFT JOIN cc ON d.doc_id = cc.id
-""",
-        """,
-  clusters AS MATERIALIZED (
-    SELECT d.doc_id, coalesce(cc.cluster_id, d.doc_id) AS cluster_id
-    FROM documents d LEFT JOIN cc ON d.doc_id = cc.id
-  ),
+Q_ER_CLUSTER_EVAL_SQL = f"""{_ER_CLUSTERS_SQL},
   pred AS MATERIALIZED (
     SELECT l.doc_id AS id_a, r.doc_id AS id_b
     FROM clusters l JOIN clusters r ON l.cluster_id = r.cluster_id AND l.doc_id < r.doc_id
@@ -436,9 +424,7 @@ SELECT tp, n_align, n_truth,
        2 * (tp / n_align::DOUBLE) * (tp / n_truth::DOUBLE)
          / ((tp / n_align::DOUBLE) + (tp / n_truth::DOUBLE)) AS f1
 FROM stats
-""",
-    )
-)
+"""
 
 
 # --- dedup family ------------------------------------------------------------
@@ -1801,23 +1787,8 @@ def q_er_eval_prf1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q_ER_EVAL_SQL = (
     f"WITH {_er_blocks_sql()}, {_er_pairs_sql()}, {_er_scores_sql()}, "
-    """
-  best_a AS (
-    SELECT id_a, id_b FROM (
-      SELECT id_a, id_b,
-             row_number() OVER (PARTITION BY id_a ORDER BY score DESC, id_b ASC) AS rn
-      FROM final_scored) WHERE rn = 1
-  ),
-  best_b AS (
-    SELECT id_a, id_b FROM (
-      SELECT id_a, id_b,
-             row_number() OVER (PARTITION BY id_b ORDER BY score DESC, id_a ASC) AS rn
-      FROM final_scored) WHERE rn = 1
-  ),
-  aligns AS (
-    SELECT s.id_a, s.id_b FROM final_scored s
-    JOIN best_a USING (id_a, id_b) JOIN best_b USING (id_a, id_b)
-  ),
+    + _mutual_best_sql("final_scored", "id_a", "id_b", "score", "aligns")
+    + """,
   truth AS (SELECT id_a, id_b FROM final_scored WHERE jac3 >= 0.55),
   stats AS (
     SELECT
@@ -2531,15 +2502,8 @@ def _mwgm_sql(rounds: int) -> str:
     prev = "final_scored"
     matched: list[str] = []
     for i in range(1, rounds + 1):
+        parts.append("," + _mutual_best_sql(prev, "id_a", "id_b", "score", f"m_{i}"))
         parts.append(f""",
-  ba_{i} AS (SELECT id_a, id_b FROM (
-    SELECT id_a, id_b, row_number() OVER (PARTITION BY id_a ORDER BY score DESC, id_b ASC) AS rn
-    FROM {prev}) WHERE rn = 1),
-  bb_{i} AS (SELECT id_a, id_b FROM (
-    SELECT id_a, id_b, row_number() OVER (PARTITION BY id_b ORDER BY score DESC, id_a ASC) AS rn
-    FROM {prev}) WHERE rn = 1),
-  m_{i} AS MATERIALIZED (SELECT s.id_a, s.id_b, s.score FROM {prev} s
-            JOIN ba_{i} USING (id_a, id_b) JOIN bb_{i} USING (id_a, id_b)),
   mm_{i} AS MATERIALIZED ({' UNION ALL '.join(f'SELECT * FROM m_{j}' for j in range(1, i + 1))}),
   r_{i} AS MATERIALIZED (SELECT * FROM {prev}
             WHERE id_a NOT IN (SELECT id_a FROM mm_{i})
@@ -2569,15 +2533,9 @@ Q_ER_BOOTSTRAP_SQL = (
       SELECT id_a, id_b, score,
              row_number() OVER (PARTITION BY id_a ORDER BY score DESC, id_b ASC) AS rn
       FROM final_scored WHERE score >= 0.5) WHERE rn <= 10
-  ),
-  ba AS (SELECT id_a, id_b FROM (
-    SELECT id_a, id_b, row_number() OVER (PARTITION BY id_a ORDER BY score DESC, id_b ASC) AS rn
-    FROM cands) WHERE rn = 1),
-  bb AS (SELECT id_a, id_b FROM (
-    SELECT id_a, id_b, row_number() OVER (PARTITION BY id_b ORDER BY score DESC, id_a ASC) AS rn
-    FROM cands) WHERE rn = 1),
-  m1 AS (SELECT c.id_a, c.id_b, c.score FROM cands c
-         JOIN ba USING (id_a, id_b) JOIN bb USING (id_a, id_b)),
+  ),"""
+    + _mutual_best_sql("cands", "id_a", "id_b", "score", "m1")
+    + """,
   -- round 2 over static scores reproduces m1; conflict resolution is
   -- rn=1 per id_a then per id_b over the union (x/y merge, bootea.py:45-93)
   merged AS (SELECT * FROM m1 UNION ALL SELECT * FROM m1),
@@ -2610,16 +2568,9 @@ scored AS (
               ELSE 1.0 - levenshtein(v1.p, v2.p) / greatest(len(v1.p), len(v2.p))::DOUBLE END, 9) AS score
   FROM v1 CROSS JOIN v2
 ),
-thr AS (SELECT * FROM scored WHERE score >= 0.5),
-ba AS (SELECT id_a, id_b FROM (
-  SELECT id_a, id_b, row_number() OVER (PARTITION BY id_a ORDER BY score DESC, id_b ASC) AS rn
-  FROM thr) WHERE rn = 1),
-bb AS (SELECT id_a, id_b FROM (
-  SELECT id_a, id_b, row_number() OVER (PARTITION BY id_b ORDER BY score DESC, id_a ASC) AS rn
-  FROM thr) WHERE rn = 1)
-SELECT t.id_a, t.id_b, t.score FROM thr t
-JOIN ba USING (id_a, id_b) JOIN bb USING (id_a, id_b)
-"""
+thr AS (SELECT * FROM scored WHERE score >= 0.5),""" + _mutual_best_sql(
+    "thr", "id_a", "id_b", "score", "mutual"
+) + "\nSELECT id_a, id_b, score FROM mutual"
 
 
 def q_er_kfold_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2641,17 +2592,12 @@ def q_er_kfold_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q_ER_KFOLD_SQL = (
     f"WITH {_er_blocks_sql()}, {_er_pairs_sql()}, {_er_scores_sql()}, "
-    """
-  best_a AS (SELECT id_a, id_b FROM (
-    SELECT id_a, id_b, row_number() OVER (PARTITION BY id_a ORDER BY score DESC, id_b ASC) AS rn
-    FROM final_scored) WHERE rn = 1),
-  best_b AS (SELECT id_a, id_b FROM (
-    SELECT id_a, id_b, row_number() OVER (PARTITION BY id_b ORDER BY score DESC, id_a ASC) AS rn
-    FROM final_scored) WHERE rn = 1),
+    + _mutual_best_sql("final_scored", "id_a", "id_b", "score", "mutual")
+    + """,
   aligns AS (
-    SELECT s.id_a, s.id_b,
-           (('0x' || substr(md5('folds-v1' || s.id_a::VARCHAR || '|' || s.id_b::VARCHAR), 1, 8))::UBIGINT::BIGINT % 5)::INT AS fold
-    FROM final_scored s JOIN best_a USING (id_a, id_b) JOIN best_b USING (id_a, id_b)
+    SELECT id_a, id_b,
+           (('0x' || substr(md5('folds-v1' || id_a::VARCHAR || '|' || id_b::VARCHAR), 1, 8))::UBIGINT::BIGINT % 5)::INT AS fold
+    FROM mutual
   ),
   truth AS (
     SELECT id_a, id_b,
@@ -2802,22 +2748,6 @@ _LEV_RATIO_SQL = (
     "(CASE WHEN greatest(len({a}), len({b})) = 0 THEN 1.0 "
     "ELSE 1.0 - levenshtein({a}, {b}) / greatest(len({a}), len({b}))::DOUBLE END)"
 )
-
-
-def _mutual_best_sql(src: str, ka: str, kb: str, score: str, out: str) -> str:
-    """CTE fragment: mutual-best pairs of ``src`` on (ka, kb) by ``score``
-    with ascending-partner tie-breaks (matching.best_per_side order)."""
-    return f"""
-  {out}_ba AS (SELECT {ka}, {kb} FROM (
-    SELECT {ka}, {kb}, row_number() OVER (PARTITION BY {ka} ORDER BY {score} DESC, {kb} ASC) AS rn
-    FROM {src}) WHERE rn = 1),
-  {out}_bb AS (SELECT {ka}, {kb} FROM (
-    SELECT {ka}, {kb}, row_number() OVER (PARTITION BY {kb} ORDER BY {score} DESC, {ka} ASC) AS rn
-    FROM {src}) WHERE rn = 1),
-  {out} AS MATERIALIZED (
-    SELECT s.* FROM {src} s
-    JOIN {out}_ba USING ({ka}, {kb}) JOIN {out}_bb USING ({ka}, {kb})
-  )"""
 
 
 def _imuse_interactive_sql() -> str:
@@ -3549,7 +3479,7 @@ def q_blocking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from entity_matchers_spark.operators.blocking import blocking_metrics
 
     blocks = _er_spark_blocks(spark, sf_dir)
-    out = blocking_metrics(blocks, max_block_size=ER_CAP)
+    out = blocking_metrics(blocks, max_block_size=SPEC.max_block_size)
     return out.select(
         "num_blocks", "total_keys", "max_block", "capped_keys",
         F.round("pair_budget", 1).alias("pair_budget"),
@@ -3561,7 +3491,7 @@ Q_BLOCKING_AUDIT_SQL = (
     f"""
   sizes AS (SELECT block_id, count(*) AS n FROM blocks GROUP BY block_id)
 SELECT count(*) AS num_blocks, sum(n)::BIGINT AS total_keys, max(n) AS max_block,
-       sum(CASE WHEN n > {ER_CAP} THEN n ELSE 0 END)::BIGINT AS capped_keys,
+       sum(CASE WHEN n > {SPEC.max_block_size} THEN n ELSE 0 END)::BIGINT AS capped_keys,
        round(sum(n * (n - 1) / 2.0), 1) AS pair_budget
 FROM sizes
 """
@@ -3679,7 +3609,7 @@ def q_er_pairs_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from entity_matchers_spark.operators.blocking import salted_candidate_pairs
 
     blocks = _er_spark_blocks(spark, sf_dir)
-    return salted_candidate_pairs(blocks, chunk_size=ER_CAP)
+    return salted_candidate_pairs(blocks, chunk_size=SPEC.max_block_size)
 
 
 Q_ER_PAIRS_SALTED_SQL = (
@@ -4728,18 +4658,12 @@ def q_meta_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys: CBS-weighted comparison graph, edges below the global mean weight
     pruned (integer cross-multiplied comparison — no floating mean)."""
     return blocking.meta_blocking_prune(
-        _er_spark_blocks(spark, sf_dir), max_block_size=ER_CAP, scheme="wep"
+        _er_spark_blocks(spark, sf_dir), max_block_size=SPEC.max_block_size, scheme="wep"
     )
 
 
 Q_META_BLOCKING_SQL = f"""
-WITH {_er_blocks_sql()},
-capped AS MATERIALIZED (
-  SELECT b.* FROM blocks b
-  WHERE b.block_id NOT IN (
-    SELECT block_id FROM blocks GROUP BY block_id HAVING count(*) > {ER_CAP}
-  )
-),
+WITH {_er_blocks_sql()}, {_er_capped_sql()},
 nb AS MATERIALIZED (SELECT id, count(*) AS nb FROM capped GROUP BY id),
 edges AS MATERIALIZED (
   SELECT l.id AS id_a, r.id AS id_b, count(*)::BIGINT AS cbs
@@ -5127,15 +5051,11 @@ def q_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     full MinHash+domain chain — "how much recall would domain keys alone
     keep, at what pair budget". Candidate count from block sizes (exact
     here: one domain key per id), never materializing pairs."""
-    docs = _docs(spark, sf_dir)
-    dom = docs.select(
-        F.col("doc_id").alias("id"),
-        F.concat(F.lit("dom:"), F.col("source")).alias("block_id"),
-    )
+    docs = _er_docs(spark, sf_dir)
     gold = _er_spark_scores(spark, sf_dir).where(F.col("jac3") >= 0.55).select(
         "id_a", "id_b"
     )
-    return blocking.blocking_quality(dom, gold, n_entities=docs.count())
+    return blocking.blocking_quality(domain_keys(docs), gold, n_entities=docs.count())
 
 
 def q_blocking_rule_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5194,7 +5114,7 @@ def _blocking_quality_sql() -> str:
     return f"""
 WITH {_er_blocks_sql()}, {_er_pairs_sql()}, {_er_scores_sql()},
 gold AS MATERIALIZED (SELECT id_a, id_b FROM final_scored WHERE jac3 >= 0.55),
-dom AS (SELECT doc_id AS id, 'dom:' || source AS block_id FROM documents),
+dom AS ({_DOMAIN_KEYS_SQL}),
 sizes AS (SELECT block_id, count(*)::BIGINT AS nb FROM dom GROUP BY block_id),
 budget AS (SELECT sum((nb * (nb - 1) / 2)::BIGINT)::BIGINT AS n_cands FROM sizes),
 covered AS (
@@ -5288,38 +5208,11 @@ def q_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_GOLDEN_RECORDS_SQL = (
-    f"WITH RECURSIVE {_er_blocks_sql()}, {_er_pairs_sql()}, {_er_scores_sql()}, "
-    f"""
-  thresholded AS (SELECT * FROM final_scored WHERE score >= {ER_EDGE_THRESHOLD}),
-  best_a AS (
-    SELECT id_a, id_b FROM (
-      SELECT id_a, id_b,
-             row_number() OVER (PARTITION BY id_a ORDER BY score DESC, id_b ASC) AS rn
-      FROM thresholded) WHERE rn = 1
-  ),
-  best_b AS (
-    SELECT id_a, id_b FROM (
-      SELECT id_a, id_b,
-             row_number() OVER (PARTITION BY id_b ORDER BY score DESC, id_a ASC) AS rn
-      FROM thresholded) WHERE rn = 1
-  ),
-  edges AS (
-    SELECT s.id_a, s.id_b FROM thresholded s
-    JOIN best_a USING (id_a, id_b) JOIN best_b USING (id_a, id_b)
-  ),
-  und AS (
-    SELECT id_a AS u, id_b AS v FROM edges
-    UNION SELECT id_b AS u, id_a AS v FROM edges
-  ),
-  reach(u, v) AS (
-    SELECT u, v FROM und
-    UNION
-    SELECT r.u, n.v FROM reach r JOIN und n ON r.v = n.u
-  ),
-  cc AS (SELECT u AS id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u),
+    f"{_ER_CLUSTERS_SQL},"
+    """
   joined AS MATERIALIZED (
-    SELECT coalesce(cc.cluster_id, d.doc_id) AS cluster_id, d.doc_id, d.source, d.lang, d.n_chars
-    FROM documents d LEFT JOIN cc ON d.doc_id = cc.id
+    SELECT c.cluster_id, d.doc_id, d.source, d.lang, d.n_chars
+    FROM documents d JOIN clusters c USING (doc_id)
   ),
   base AS (
     SELECT cluster_id, count(*)::BIGINT AS n_members, min(doc_id) AS canonical_id,
@@ -5348,7 +5241,8 @@ FROM base b JOIN top_source s USING (cluster_id) JOIN top_lang l USING (cluster_
 
 def q_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-free train/valid/test split: the 80/10/10 decision hashes
-    the CLUSTER id (shared transitive-cluster table), so a near-dup/entity
+    the CLUSTER id (the shared transitive clusters of every edge at or
+    above the calibrated threshold), so a near-dup/entity
     cluster lands whole in one split — the guard against test-set
     contamination by training near-duplicates (Lee et al. 2022)."""
     from entity_matchers_spark.operators.sampling import cluster_split
@@ -5370,24 +5264,14 @@ def _build_cluster_split_sql() -> str:
     whens = " ".join(
         f"WHEN {u} < {b!r} THEN '{n}'" for n, b in zip(names[:-1], bounds)
     )
-    return Q_ER_CLUSTERS_SQL.replace(
-        """
-SELECT d.doc_id, coalesce(cc.cluster_id, d.doc_id) AS cluster_id
-FROM documents d LEFT JOIN cc ON d.doc_id = cc.id
-""",
-        f""",
-  base AS MATERIALIZED (
-    SELECT d.doc_id, coalesce(cc.cluster_id, d.doc_id) AS cluster_id
-    FROM documents d LEFT JOIN cc ON d.doc_id = cc.id
-  )
+    return f"""{_ER_CLUSTERS_SQL}
 SELECT doc_id, cluster_id, CASE {whens} ELSE '{names[-1]}' END AS split
-FROM base
-""",
-    )
+FROM clusters
+"""
 
 
 def q_er_bcubed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B-cubed P/R/F1 of the mutual-best transitive clusters against the
+    """B-cubed P/R/F1 of the thresholded transitive clusters against the
     truth classes (transitive closure of the jac3-derived truth pairs) —
     the per-record clustering metric beside er_cluster_eval's pairwise F1."""
     from entity_matchers_spark.operators.evaluation import bcubed
@@ -5405,56 +5289,13 @@ def q_er_bcubed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 Q_ER_BCUBED_SQL = (
-    f"WITH RECURSIVE {_er_blocks_sql()}, {_er_pairs_sql()}, {_er_scores_sql()}, "
-    f"""
-  thresholded AS (SELECT * FROM final_scored WHERE score >= {ER_EDGE_THRESHOLD}),
-  best_a AS (
-    SELECT id_a, id_b FROM (
-      SELECT id_a, id_b,
-             row_number() OVER (PARTITION BY id_a ORDER BY score DESC, id_b ASC) AS rn
-      FROM thresholded) WHERE rn = 1
-  ),
-  best_b AS (
-    SELECT id_a, id_b FROM (
-      SELECT id_a, id_b,
-             row_number() OVER (PARTITION BY id_b ORDER BY score DESC, id_a ASC) AS rn
-      FROM thresholded) WHERE rn = 1
-  ),
-  edges AS (
-    SELECT s.id_a, s.id_b FROM thresholded s
-    JOIN best_a USING (id_a, id_b) JOIN best_b USING (id_a, id_b)
-  ),
-  und AS (
-    SELECT id_a AS u, id_b AS v FROM edges
-    UNION SELECT id_b AS u, id_a AS v FROM edges
-  ),
-  reach(u, v) AS (
-    SELECT u, v FROM und
-    UNION
-    SELECT r.u, n.v FROM reach r JOIN und n ON r.v = n.u
-  ),
-  cc AS (SELECT u AS id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u),
-  pred AS MATERIALIZED (
-    SELECT d.doc_id AS id, coalesce(cc.cluster_id, d.doc_id) AS cluster_id
-    FROM documents d LEFT JOIN cc ON d.doc_id = cc.id
-  ),
-  tedges AS (SELECT id_a, id_b FROM final_scored WHERE jac3 >= 0.55),
-  tund AS (
-    SELECT id_a AS u, id_b AS v FROM tedges
-    UNION SELECT id_b AS u, id_a AS v FROM tedges
-  ),
-  treach(u, v) AS (
-    SELECT u, v FROM tund
-    UNION
-    SELECT r.u, n.v FROM treach r JOIN tund n ON r.v = n.u
-  ),
-  tcc AS (SELECT u AS id, least(u, min(v)) AS class_id FROM treach GROUP BY u),
-  truth AS MATERIALIZED (
-    SELECT d.doc_id AS id, coalesce(tcc.class_id, d.doc_id) AS class_id
-    FROM documents d LEFT JOIN tcc ON d.doc_id = tcc.id
-  ),
+    f"{_ER_CLUSTERS_SQL},"
+    + _doc_components_sql(
+        "SELECT id_a, id_b FROM final_scored WHERE jac3 >= 0.55", "truth", "class_id"
+    )
+    + """,
   j AS MATERIALIZED (
-    SELECT p.id, p.cluster_id, t.class_id FROM pred p JOIN truth t USING (id)
+    SELECT doc_id AS id, p.cluster_id, t.class_id FROM clusters p JOIN truth t USING (doc_id)
   ),
   c_sz AS (SELECT cluster_id, count(*)::BIGINT AS c_n FROM j GROUP BY cluster_id),
   t_sz AS (SELECT class_id, count(*)::BIGINT AS t_n FROM j GROUP BY class_id),

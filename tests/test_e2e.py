@@ -3,7 +3,8 @@
 - blocking pair-recall on planted duplicates
 - pairwise F1 ≥ 0.99 on labeled pairs sharing a blocking key
 - kill-and-rerun resume: identical final cluster table (FIXTURES.md §4)
-- oracle parity: ``score_pairs`` equals the DuckDB ``er_pair_scores`` oracle
+- oracle parity: the chain's blocks → pairs and ``score_pairs`` equal the
+  DuckDB ``er_candidate_pairs`` and ``er_pair_scores`` oracles
 """
 
 from __future__ import annotations
@@ -30,9 +31,11 @@ def corpus(spark):
 
 def test_blocking_recall_on_planted_duplicates(spark, corpus):
     pages, labels = corpus
+    cfg = PipelineConfig()
     docs = pages.select(F.col("page_id").alias("id"), "url", "text")
-    mh = blocking.minhash_block_keys(docs, "id", "text")
-    metrics = blocking.blocking_metrics(mh, labels.where("label = 1")).first()
+    metrics = blocking.blocking_metrics(
+        cfg.minhash_keys(docs), labels.where("label = 1"), max_block_size=cfg.max_block_size
+    ).first()
     assert metrics.pair_recall >= 0.98, metrics
     assert metrics.max_block is not None
 
@@ -41,11 +44,11 @@ def test_pairwise_f1_on_labeled_same_block_pairs(spark, corpus):
     """The BASELINE.json acceptance metric: score labeled pairs that share a
     blocking key, threshold, F1 ≥ 0.99."""
     pages, labels = corpus
+    cfg = PipelineConfig()
     docs = pages.select(F.col("page_id").alias("id"), "text")
-    blocks = blocking.minhash_block_keys(docs, "id", "text")
-    cands = blocking.candidate_pairs(blocks, max_block_size=64)
+    cands = cfg.pairs(cfg.minhash_keys(docs))
     same_block = labels.join(cands, ["id_a", "id_b"], "left_semi")
-    scored = scoring.score_pairs(same_block, docs)
+    scored = cfg.scores(same_block, docs)
     labeled_scored = scored.join(labels.select("id_a", "id_b", "label"), ["id_a", "id_b"])
     threshold, f1 = scoring.fit_threshold(labeled_scored)
     assert f1 >= 0.99, (threshold, f1)
@@ -80,25 +83,46 @@ def test_pipeline_resume_identical(spark, corpus, tmp_path_factory):
     shutil.rmtree(root_b, ignore_errors=True)
 
 
-def test_score_pairs_matches_sql_oracle(spark):
-    """``score_pairs`` is the one pair scorer the registry, the pipeline and
-    the benchmarks run: over the registry's sf0.001 ER candidate pairs its
-    features and blend must equal the DuckDB oracle bit for bit (full-
-    precision repr, as the correctness gate compares them)."""
+def _assert_chain_matches_oracle(spark, build, oracle_sql):
+    """``build`` over the ER chain's sf0.001 documents equals the DuckDB
+    oracle bit for bit (full-precision repr, as the correctness gate
+    compares them)."""
     import duckdb
 
     from entity_matchers_spark import queries as Q
     from tools.check_correctness import canon_rows
 
     sf_dir = "/root/testdata/sf0.001"
-    pairs, docs = Q._er_spark_pairs(spark, sf_dir), Q._docs(spark, sf_dir)
-    scored = scoring.score_pairs(pairs, docs, id_col="doc_id")
-    cols, got = canon_rows(scored.columns, [tuple(r) for r in scored.collect()])
+    df = build(Q._er_docs(spark, sf_dir))
+    cols, got = canon_rows(df.columns, [tuple(r) for r in df.collect()])
     con = duckdb.connect()
     con.sql(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
-    oracle = con.sql(Q.Q_ER_PAIR_SCORES_SQL)
+    oracle = con.sql(oracle_sql)
     ocols, want = canon_rows(oracle.columns, oracle.fetchall())
     assert cols == ocols
-    assert len(got) == len(want) > 0
+    assert len(got) == len(want) > 0, (len(got), len(want))
     bad = [(g, w) for g, w in zip(got, want) if g != w]
     assert not bad, f"{len(bad)} of {len(want)} rows differ; first (spark, oracle): {bad[0]}"
+
+
+def test_candidate_pairs_match_sql_oracle(spark):
+    """The chain's blocks → pairs, at the pipeline's spec, are what the
+    registry's ``er_candidate_pairs`` oracle generates."""
+    from entity_matchers_spark.queries import Q_ER_CANDIDATE_PAIRS_SQL
+
+    cfg = PipelineConfig()
+    _assert_chain_matches_oracle(
+        spark, lambda docs: cfg.pairs(cfg.blocks(docs)), Q_ER_CANDIDATE_PAIRS_SQL
+    )
+
+
+def test_score_pairs_matches_sql_oracle(spark):
+    """``score_pairs`` is the one pair scorer the registry, the pipeline and
+    the benchmarks run: over the chain's candidate pairs its features and
+    blend must equal the ``er_pair_scores`` oracle."""
+    from entity_matchers_spark.queries import Q_ER_PAIR_SCORES_SQL
+
+    cfg = PipelineConfig()
+    _assert_chain_matches_oracle(
+        spark, lambda docs: cfg.scores(cfg.pairs(cfg.blocks(docs)), docs), Q_ER_PAIR_SCORES_SQL
+    )

@@ -148,17 +148,15 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from entity_matchers_spark import queries as Q
-    from entity_matchers_spark.operators import blocking as B
-    from entity_matchers_spark.operators.scoring import score_pairs
 
     def uncached(name):
         """The registry caches the ER chain behind localCheckpoint (hiding
-        the plan); rebuild those two from the raw operators."""
+        the plan); rebuild those two from the chain spec, uncached."""
         if name == "er_candidate_pairs":
-            return B.candidate_pairs(Q._er_spark_blocks(spark, sf_dir), Q.ER_CAP)
+            return Q.SPEC.pairs(Q._er_spark_blocks(spark, sf_dir))
         if name == "er_pair_scores":
-            pairs = B.candidate_pairs(Q._er_spark_blocks(spark, sf_dir), Q.ER_CAP)
-            return score_pairs(pairs, Q._docs(spark, sf_dir), id_col="doc_id")
+            pairs = Q.SPEC.pairs(Q._er_spark_blocks(spark, sf_dir))
+            return Q.SPEC.scores(pairs, Q._er_docs(spark, sf_dir))
         if name == "hll_distinct":
             # the registry query checkpoints the register table (hiding the
             # plan behind ExistingRDD); audit the raw sketch path instead
