@@ -47,12 +47,19 @@ def normalized_domain(url: Column | str) -> Column:
     return F.regexp_replace(F.lower(host), r"^www\.", "")
 
 
+def domain_keys(docs: DataFrame) -> DataFrame:
+    """(id, block_id) = ``dom:<domain>`` over docs with ``id`` and ``domain``;
+    docs with an empty domain get none."""
+    return docs.select(
+        "id", F.concat(F.lit("dom:"), F.col("domain")).alias("block_id")
+    ).where(F.col("block_id") != "dom:")
+
+
 def domain_block_keys(df: DataFrame, id_col: str = "id", url_col: str = "url") -> DataFrame:
     """(id, block_id) from the normalized URL domain."""
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.concat(F.lit("dom:"), normalized_domain(url_col)).alias("block_id"),
-    ).where(F.col("block_id") != "dom:")
+    return domain_keys(
+        df.select(F.col(id_col).alias("id"), normalized_domain(url_col).alias("domain"))
+    )
 
 
 def minhash_signatures(

@@ -37,8 +37,9 @@ class PipelineConfig:
 
     The pipeline stages, the registry's ER queries and their DuckDB oracles,
     the bench scoring probe and the plan audit all build blocks → pairs →
-    scores → matches → clusters from these fields through these methods.
-    The chain's input is docs with ``id``, ``text`` and ``domain``.
+    scores → matches from these fields through these methods, then cluster
+    the matches with ``clustering.clusters_with_singletons``. The chain's
+    input is docs with ``id``, ``text`` and ``domain``.
     """
 
     num_bands: int = 16
@@ -65,7 +66,7 @@ class PipelineConfig:
     def blocks(self, docs: DataFrame) -> DataFrame:
         """MinHash band keys plus one domain key per doc with a non-empty
         ``domain``."""
-        return self.minhash_keys(docs).unionByName(domain_keys(docs))
+        return self.minhash_keys(docs).unionByName(blocking.domain_keys(docs))
 
     def pairs(self, blocks: DataFrame) -> DataFrame:
         return blocking.candidate_pairs(blocks, self.max_block_size)
@@ -81,18 +82,6 @@ class PipelineConfig:
         # at most one edge per page and cap clusters at size 2. The
         # calibrated threshold is the match decision; CC adds transitivity.
         return matching.threshold_match(scores, self.edge_threshold)
-
-    def clusters(self, docs: DataFrame, matches: DataFrame) -> DataFrame:
-        """(id, cluster_id) for every doc: connected components of the
-        matches, unmatched docs as singletons."""
-        return clustering.clusters_with_singletons(docs, matches)
-
-
-def domain_keys(docs: DataFrame) -> DataFrame:
-    """(id, block_id) = ``dom:<domain>``; docs with an empty domain get none."""
-    return docs.select(
-        "id", F.concat(F.lit("dom:"), F.col("domain")).alias("block_id")
-    ).where(F.col("block_id") != "dom:")
 
 
 class CheckpointedPipeline:
@@ -154,11 +143,11 @@ class CheckpointedPipeline:
                 F.col("page_id").alias("id"), "url", "warc_ts", "lang",
                 F.col("extracted_text").alias("text"),
             )
-        docs = self.read("extract").select(
-            "id", "text", blocking.normalized_domain("url").alias("domain")
-        )
+        docs = self.read("extract")
         if stage == "blocks":
-            return c.blocks(docs)
+            return c.blocks(
+                docs.select("id", "text", blocking.normalized_domain("url").alias("domain"))
+            )
         if stage == "pairs":
             return c.pairs(self.read("blocks"))
         if stage == "scores":
@@ -166,7 +155,7 @@ class CheckpointedPipeline:
         if stage == "matches":
             return c.matches(self.read("scores"))
         if stage == "clusters":
-            return c.clusters(docs, self.read("matches"))
+            return clustering.clusters_with_singletons(docs, self.read("matches"))
         raise ValueError(f"unknown stage {stage}")
 
     # -- public API ---------------------------------------------------------

@@ -9,6 +9,7 @@ rounded where engines could differ in summation order.
 
 from __future__ import annotations
 
+import dataclasses
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -20,7 +21,7 @@ from entity_matchers_spark.functions.hashing import (
 )
 from entity_matchers_spark.functions.shingles import hashed_shingles, tokens
 from entity_matchers_spark.operators import blocking, clustering, matching, scoring
-from entity_matchers_spark.plans.pipeline import PipelineConfig, domain_keys
+from entity_matchers_spark.plans.pipeline import PipelineConfig
 
 # The ER chain's spec: the registry's ER queries and their oracles block,
 # score, match and cluster exactly as the pipeline does. The documents table
@@ -119,7 +120,7 @@ def _minhash_keys_sql(n: int, grams: str, prefix: str = "") -> str:
   )"""
 
 
-# oracle of pipeline.domain_keys over documents (source ~ domain)
+# oracle of blocking.domain_keys over documents (source ~ domain)
 _DOMAIN_KEYS_SQL = (
     "SELECT doc_id AS id, 'dom:' || source AS block_id FROM documents WHERE source <> ''"
 )
@@ -307,9 +308,8 @@ def _er_spark_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream consumer."""
     def build() -> DataFrame:
         matches = SPEC.matches(_er_spark_scores(spark, sf_dir))
-        return SPEC.clusters(_er_docs(spark, sf_dir), matches).select(
-            F.col("id").alias("doc_id"), "cluster_id"
-        )
+        clusters = clustering.clusters_with_singletons(_er_docs(spark, sf_dir), matches)
+        return clusters.select(F.col("id").alias("doc_id"), "cluster_id")
     return _er_cached(spark, sf_dir, "clusters", build)
 
 
@@ -332,11 +332,7 @@ def q_er_block_keys_2gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     n=2). Keys carry a ``g2:`` prefix so a user unioning both variants
     (the reference's actual setup) cannot collide band keys across gram
     sizes."""
-    mh2 = blocking.minhash_block_keys(
-        _docs(spark, sf_dir), id_col="doc_id", text_col="text",
-        num_bands=SPEC.num_bands, rows_per_band=SPEC.rows_per_band, shingle_n=2,
-        text_cap=SPEC.text_cap, seed=SPEC.seed,
-    )
+    mh2 = dataclasses.replace(SPEC, shingle_n=2).minhash_keys(_er_docs(spark, sf_dir))
     return mh2.select(
         "id", F.concat(F.lit("g2:"), F.col("block_id")).alias("block_id")
     )
@@ -5055,7 +5051,9 @@ def q_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     gold = _er_spark_scores(spark, sf_dir).where(F.col("jac3") >= 0.55).select(
         "id_a", "id_b"
     )
-    return blocking.blocking_quality(domain_keys(docs), gold, n_entities=docs.count())
+    return blocking.blocking_quality(
+        blocking.domain_keys(docs), gold, n_entities=docs.count()
+    )
 
 
 def q_blocking_rule_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
