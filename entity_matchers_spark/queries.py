@@ -263,8 +263,9 @@ def _doc_components_sql(edges: str, out: str, label: str) -> str:
 
 
 # The whole ER chain as oracle CTEs: ``blocks``, ``pairs``, ``final_scored``
-# and ``clusters`` (doc_id, cluster_id), the oracle of SPEC.clusters over
-# SPEC.matches — every edge scored at or above the spec's threshold.
+# and ``clusters`` (doc_id, cluster_id), the oracle of
+# clustering.clusters_with_singletons over SPEC.matches — every edge scored
+# at or above the spec's threshold.
 _ER_CLUSTERS_SQL = (
     f"WITH RECURSIVE {_er_blocks_sql()}, {_er_pairs_sql()}, {_er_scores_sql()}, "
     + _doc_components_sql(
