@@ -198,9 +198,10 @@ def vocab_scaled_growth(spark, n_small: int = 500, n_big: int = 5000) -> dict:
         prefix_filtered_jaccard_pairs,
     )
 
+    vocab_per_doc = 40.0
     per_n: dict[int, dict[str, int]] = {}
     for n in (n_small, n_big):
-        docs = synthetic_documents(spark, n).localCheckpoint(eager=True)
+        docs = synthetic_documents(spark, n, vocab_per_doc).localCheckpoint(eager=True)
         g = hashed_shingle_table(docs, "doc_id", "text", n=7).localCheckpoint()
         per_n[n] = {
             "docs": n,
@@ -229,7 +230,7 @@ def vocab_scaled_growth(spark, n_small: int = 500, n_big: int = 5000) -> dict:
         return round(d[key] / allp, 6) if allp else 0.0
 
     return {
-        "vocab_per_doc": 40.0,
+        "vocab_per_doc": vocab_per_doc,
         "counts": per_n,
         "growth_exponent": {
             k: expo(k)

@@ -14,8 +14,7 @@ Design rules (see SURVEY.md §7):
 - DataFrame/SQL only; no RDDs. Catalyst plans the physical execution.
 - Python appears only in Arrow-batched pandas UDFs, never row-at-a-time.
 - Every hash used in signatures is cross-engine stable (md5-derived) so that
-  results are verifiable against an independent SQL oracle, with xxhash64
-  available as the faster production path.
+  results are verifiable against an independent SQL oracle.
 - Self-joins emit pairs with id_a < id_b; hot blocking keys are frequency
   capped and salted; AQE is enabled for skew-join handling.
 """

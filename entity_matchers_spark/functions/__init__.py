@@ -3,7 +3,6 @@
 from entity_matchers_spark.functions.hashing import (
     MINHASH_PRIME,
     minhash_permutation_params,
-    minhash_signature,
     stable_hash32,
     stable_hash64,
 )
@@ -26,7 +25,6 @@ __all__ = [
     "jaro_winkler_udf",
     "levenshtein_ratio",
     "minhash_permutation_params",
-    "minhash_signature",
     "stable_hash32",
     "stable_hash64",
     "token_set_levenshtein_ratio",

@@ -13,12 +13,11 @@ Here every hash is a *pure column expression*:
   any SQL engine reproduces exactly (``('0x' || substr(md5(x),1,k))::int``),
   so results are verifiable against an independent oracle. md5 is JVM-side
   and stays inside whole-stage codegen.
-- ``xxhash64`` remains the faster production path for pure-Spark runs; the
-  choice is a constructor flag, not a code change.
 - MinHash permutations use the classic affine trick ``(a*h + b) mod p`` over
   the 32-bit base hash, with (a, b) drawn from a seeded LCG embedded as plan
-  constants — no per-permutation md5, no shuffle, no Python. Signature math
-  is ``transform``/``array_min`` over the shingle array, fully map-side.
+  constants — no per-permutation md5, no Python. The signatures themselves
+  are built in ``operators/blocking.lsh_signatures`` (explode + declarative
+  ``min()`` aggregates).
 """
 
 from __future__ import annotations
@@ -82,35 +81,3 @@ def stable_hash32(col: Column | str, salt: str = "") -> Column:
         c = F.concat(F.lit(salt), c)
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
 
-
-def minhash_signature(
-    shingles: Column,
-    num_perm: int,
-    seed: int = 11037,
-    use_xxhash: bool = False,
-) -> Column:
-    """``array<long>`` MinHash signature of a shingle array — pure map-side.
-
-    For each permutation i: ``min over grams of (a_i * base(g) + b_i) % p``.
-    Empty shingle arrays yield a sentinel signature of all ``p`` (never
-    collides with a real min because hashes are < p).
-
-    ``use_xxhash=True`` swaps the md5 base hash for xxhash64 (faster, Spark
-    only — not oracle-verifiable).
-    """
-    if use_xxhash:
-        base = F.transform(shingles, lambda g: F.pmod(F.xxhash64(g), F.lit(MINHASH_PRIME)))
-    else:
-        base = F.transform(
-            shingles,
-            lambda g: F.conv(F.substring(F.md5(g), 1, 8), 16, 10).cast("long") % MINHASH_PRIME,
-        )
-    params = minhash_permutation_params(num_perm, seed)
-    mins = [
-        F.coalesce(
-            F.array_min(F.transform(base, lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_PRIME)),
-            F.lit(MINHASH_PRIME),
-        )
-        for a, b in params
-    ]
-    return F.array(*mins)

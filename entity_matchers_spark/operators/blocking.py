@@ -13,7 +13,9 @@ union'd (the reference's multi-blocker-union precedent):
 1. Normalized URL-domain key — the analog of URI-tail naming
    (/root/reference/OpenEA_Mod/src/openea/approaches/rdgcn.py:529-532).
 2. MinHash-LSH band keys over character shingles of the extracted text
-   (capped at 300 chars, the ES query cap: README.md:378).
+   (capped at 300 chars, the ES query cap: README.md:378). Their builder,
+   ``lsh_band_keys``, and the pair join, ``block_self_join``, are also the
+   near-dup family's MinHash index and its IVF-cell candidate join.
 
 Scale discipline (the part the reference never faces, SURVEY.md §4):
 - **Frequency cap**: blocks larger than ``max_block_size`` are dropped — a
@@ -33,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from entity_matchers_spark.functions.hashing import MINHASH_PRIME
+from entity_matchers_spark.functions.hashing import MINHASH_PRIME, minhash_permutation_params
 
 
 def normalized_domain(url: Column | str) -> Column:
@@ -62,6 +64,73 @@ def domain_block_keys(df: DataFrame, id_col: str = "id", url_col: str = "url") -
     )
 
 
+def _gram_hashes(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int, text_cap: int
+) -> DataFrame:
+    """(id, h): the 32-bit md5 prefix of every char n-gram POSITION of the
+    lowercased, capped text — plain projections, whole-stage codegen end to
+    end. Docs whose text yields no shingle get ONE row with a null ``h``,
+    which ``lsh_signatures`` turns into the sentinel signature."""
+    t = F.lower(F.substring(F.col(text_col), 1, text_cap))
+    positions = df.select(F.col(id_col).alias("id"), t.alias("t")).select(
+        "id",
+        "t",
+        F.explode_outer(
+            F.when(
+                F.length("t") >= shingle_n,
+                F.sequence(F.lit(1), F.length("t") - F.lit(shingle_n - 1)),
+            )
+        ).alias("i"),
+    )
+    # same per-gram value as the DuckDB oracle's
+    # ('0x'||substr(md5(g),1,8))::UBIGINT::BIGINT
+    gram = F.substring(F.col("t"), F.col("i").cast("int"), shingle_n)
+    return positions.select(
+        "id", F.conv(F.substring(F.md5(gram), 1, 8), 16, 10).cast("long").alias("h")
+    )
+
+
+def lsh_signatures(hashes: DataFrame, num_perm: int, seed: int) -> DataFrame:
+    """(id, s0..s{num_perm-1}) MinHash signatures of an (id, h) gram-hash
+    table: ``num_perm`` declarative ``min((a_i·(h % p) + b_i) % p)``
+    aggregates (map-side partial aggregation, one shuffle on id). min()
+    over duplicate grams equals min() over distinct grams, so the table
+    may hold one row per gram position or per distinct gram. An id whose
+    only ``h`` is null gets the sentinel ``MINHASH_PRIME`` in every column
+    (never a real min: hashes are < p)."""
+    base = hashes.select("id", (F.col("h") % MINHASH_PRIME).alias("h"))
+    return base.groupBy("id").agg(
+        *[
+            F.coalesce(
+                F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_PRIME), F.lit(MINHASH_PRIME)
+            ).alias(f"s{i}")
+            for i, (a, b) in enumerate(minhash_permutation_params(num_perm, seed))
+        ]
+    )
+
+
+def lsh_band_keys(
+    hashes: DataFrame, num_bands: int, rows_per_band: int, seed: int
+) -> DataFrame:
+    """(id, block_id) MinHash-LSH band keys of an (id, h) gram-hash table —
+    the one LSH index builder: the ER blocker feeds it gram positions, the
+    near-dup family its hashed-gram sets. Band ``b``'s key is
+    ``mh:b:`` + its ``rows_per_band`` signature values, each followed by
+    ``-``, exploded into one row per band."""
+    sig = lsh_signatures(hashes, num_bands * rows_per_band, seed)
+    keys = [
+        F.concat(
+            F.lit(f"mh:{band}:"),
+            *[
+                F.concat(F.col(f"s{band * rows_per_band + r}").cast("string"), F.lit("-"))
+                for r in range(rows_per_band)
+            ],
+        )
+        for band in range(num_bands)
+    ]
+    return sig.select("id", F.explode(F.array(*keys)).alias("block_id"))
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "id",
@@ -70,65 +139,21 @@ def minhash_signatures(
     shingle_n: int = 3,
     text_cap: int = 300,
     seed: int = 11037,
-    use_xxhash: bool = False,
 ) -> DataFrame:
-    """(id, s0..s{num_perm-1}) MinHash signature columns.
+    """(id, s0..s{num_perm-1}) MinHash signature columns of the capped text.
 
     Shape chosen for scale: explode gram POSITIONS → row-wise
-    substring+hash (plain projections, whole-stage codegen end to end) →
-    ``num_perm`` declarative ``min()`` aggregates (map-side partial
-    aggregation, one shuffle on id). Two rejected alternatives, both
-    measured: nested higher-order-function expressions re-inline the
-    shingle array per permutation and fall out of codegen (~500× slower);
-    and even ONE ``transform()`` building a gram array first runs its
-    lambda interpreted per element — the positional form is ~3× faster
-    warm and avoids a multi-second first-call JIT penalty. min() over
-    duplicate grams equals min() over distinct grams, so no dedup is
-    needed (hashed_shingles' array_distinct stays only where gram SETS
-    are the product).
+    substring+hash → declarative ``min()`` aggregates. Two rejected
+    alternatives, both measured: nested higher-order-function expressions
+    re-inline the shingle array per permutation and fall out of codegen
+    (~500× slower); and even ONE ``transform()`` building a gram array
+    first runs its lambda interpreted per element — the positional form is
+    ~3× faster warm and avoids a multi-second first-call JIT penalty.
 
     Docs whose text yields no shingles get the sentinel signature
     ``MINHASH_PRIME`` in every column.
     """
-    from entity_matchers_spark.functions.hashing import minhash_permutation_params
-
-    t = F.lower(F.substring(F.col(text_col), 1, text_cap))
-    positions = (
-        df.select(F.col(id_col).alias("id"), t.alias("t"))
-        .where(F.length("t") >= shingle_n)
-        .select(
-            "id",
-            "t",
-            F.explode(
-                F.sequence(F.lit(1), F.length("t") - F.lit(shingle_n - 1))
-            ).alias("i"),
-        )
-    )
-    gram = F.substring(F.col("t"), F.col("i").cast("int"), shingle_n)
-    if use_xxhash:
-        base = positions.select("id", F.pmod(F.xxhash64(gram), F.lit(MINHASH_PRIME)).alias("h"))
-    else:
-        # same per-gram value as the DuckDB oracle's
-        # ('0x'||substr(md5(g),1,8))::UBIGINT::BIGINT
-        base = positions.select(
-            "id",
-            (
-                F.conv(F.substring(F.md5(gram), 1, 8), 16, 10).cast("long")
-                % MINHASH_PRIME
-            ).alias("h"),
-        )
-    params = minhash_permutation_params(num_perm, seed)
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_PRIME).alias(f"s{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    sig = base.groupBy("id").agg(*aggs)
-    # docs with no shingles (text shorter than n) → sentinel signature
-    sentinel = [F.lit(MINHASH_PRIME).alias(f"s{i}") for i in range(num_perm)]
-    empty = df.select(F.col(id_col).alias("id")).join(sig.select("id"), "id", "left_anti").select(
-        "id", *sentinel
-    )
-    return sig.unionByName(empty)
+    return lsh_signatures(_gram_hashes(df, id_col, text_col, shingle_n, text_cap), num_perm, seed)
 
 
 def minhash_block_keys(
@@ -140,26 +165,17 @@ def minhash_block_keys(
     shingle_n: int = 3,
     text_cap: int = 300,
     seed: int = 11037,
-    use_xxhash: bool = False,
 ) -> DataFrame:
     """(id, block_id) via MinHash-LSH banding over char shingles.
 
     Default 16 bands × 2 rows targets high recall at Jaccard ≥ ~0.3
     (P(hit) = 1-(1-s^2)^16: s=0.3 → 77%, s=0.5 → 99%, s=0.7 → 100%).
-    Band keys are plain concats over the materialized signature columns,
-    exploded into (id, block_id) rows.
+    Shingle-less docs carry the sentinel signature, so they share one key
+    per band (dropped by the block cap once there are many of them).
     """
-    sig = minhash_signatures(
-        df, id_col, text_col, num_bands * rows_per_band, shingle_n, text_cap, seed, use_xxhash
+    return lsh_band_keys(
+        _gram_hashes(df, id_col, text_col, shingle_n, text_cap), num_bands, rows_per_band, seed
     )
-    keys = []
-    for band in range(num_bands):
-        parts = [F.lit(f"mh:{band}:")] + [
-            F.concat(F.col(f"s{band * rows_per_band + r}").cast("string"), F.lit("-"))
-            for r in range(rows_per_band)
-        ]
-        keys.append(F.concat(*parts))
-    return sig.select("id", F.explode(F.array(*keys)).alias("block_id"))
 
 
 def cap_block_sizes(blocks: DataFrame, max_block_size: int) -> DataFrame:
@@ -178,25 +194,28 @@ def cap_block_sizes(blocks: DataFrame, max_block_size: int) -> DataFrame:
     return blocks.join(F.broadcast(hot), "block_id", "left_anti")
 
 
-def candidate_pairs(
-    blocks: DataFrame,
-    max_block_size: int = 64,
-) -> DataFrame:
-    """Self-join (id, block_id) → distinct (id_a, id_b) with id_a < id_b.
-
-    The join key is block_id; per-pair dedup happens in the same shuffle
-    via groupBy. With the frequency cap, the worst block contributes
-    O(max_block_size²) pairs — bounded regardless of corpus size.
-    """
-    capped = cap_block_sizes(blocks, max_block_size)
-    left = capped.alias("l")
-    right = capped.alias("r")
+def block_self_join(blocks: DataFrame) -> DataFrame:
+    """Self-join (id, block_id) on block_id → distinct (id_a, id_b) with
+    id_a < id_b: the one candidate-pair join of the ER blocker, the MinHash
+    near-dup index and the IVF cells. Pairs sharing several blocks are
+    collapsed in the same shuffle."""
     return (
-        left.join(right, "block_id")
+        blocks.alias("l")
+        .join(blocks.alias("r"), "block_id")
         .where(F.col("l.id") < F.col("r.id"))
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
         .distinct()
     )
+
+
+def candidate_pairs(
+    blocks: DataFrame,
+    max_block_size: int = 64,
+) -> DataFrame:
+    """Frequency-capped ``block_self_join``. With the cap, the worst block
+    contributes O(max_block_size²) pairs — bounded regardless of corpus
+    size."""
+    return block_self_join(cap_block_sizes(blocks, max_block_size))
 
 
 def blocking_metrics(

@@ -4,10 +4,10 @@ Beyond the reference's entity-alignment scope, a 100 TB corpus pipeline
 needs document-level dedup. Four families, all DataFrame-native:
 
 - exact: hash-groupBy on the full text (md5 → keep min id)
-- MinHash-LSH near-dup: band-bucket candidates (re-using the blocking
-  layer's signatures) verified with exact shingle Jaccard — verification
-  makes the result set *deterministic* (LSH only affects which pairs get
-  checked, never which pass)
+- MinHash-LSH near-dup: band-bucket candidates (the blocking layer's
+  ``lsh_band_keys`` index and ``block_self_join``) verified with exact
+  shingle Jaccard — verification makes the result set *deterministic*
+  (LSH only affects which pairs get checked, never which pass)
 - SimHash: 60-bit signature from token hashes; near-dups = pairs within
   Hamming distance k, found via the pigeonhole band trick (k+1 chunks →
   candidates must share one chunk exactly)
@@ -26,9 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from entity_matchers_spark.functions.hashing import MINHASH_PRIME
 from entity_matchers_spark.functions.shingles import tokens
 from entity_matchers_spark.functions.similarity import jaccard_hashed_udf
+from entity_matchers_spark.operators.blocking import block_self_join, lsh_band_keys
 
 SIMHASH_BITS = 60
 SIMHASH_CHUNKS = 4  # pigeonhole: hamming <= 3 pairs share >= 1 of 4 chunks
@@ -344,28 +344,13 @@ def minhash_band_blocks(
 ) -> DataFrame:
     """(id, block_id) MinHash band table from a hashed-gram table — the
     LSH INDEX both the batch near-dup join and the incremental delta probe
-    read. Factored out so one materialization serves every consumer (in
-    production this IS the stored index table, partitioned by band)."""
-    from entity_matchers_spark.functions.hashing import minhash_permutation_params
-
-    num_perm = num_bands * rows_per_band
-    base = grams_arr.select("id", F.explode("grams").alias("hg")).select(
-        "id", (F.col("hg") % MINHASH_PRIME).alias("h")
+    read (in production this IS the stored index table, partitioned by
+    band). The grams feed ``blocking.lsh_band_keys``, the ER blocker's
+    builder; a doc with no grams has no explode row, so it never enters
+    the index."""
+    return lsh_band_keys(
+        grams_arr.select("id", F.explode("grams").alias("h")), num_bands, rows_per_band, seed
     )
-    params = minhash_permutation_params(num_perm, seed)
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_PRIME).alias(f"s{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    sig = base.groupBy("id").agg(*aggs)
-    keys = []
-    for band in range(num_bands):
-        parts = [F.lit(f"b{band}:")] + [
-            F.concat(F.col(f"s{band * rows_per_band + r}").cast("string"), F.lit("-"))
-            for r in range(rows_per_band)
-        ]
-        keys.append(F.concat(*parts))
-    return sig.select("id", F.explode(F.array(*keys)).alias("block_id"))
 
 
 def minhash_neardup_pairs(
@@ -412,8 +397,9 @@ def minhash_neardup_pairs(
     capped per doc, /root/reference/README.md:378), not a near-dup metric.
 
     The md5 gram hash is computed in ONE pass: the hashed-gram table is
-    localCheckpoint-ed and BOTH the signatures (explode → 32 declarative
-    mins over ``h % p``) and the exact verify derive from it. The previous
+    localCheckpoint-ed and BOTH the signatures (explode →
+    ``num_bands × rows_per_band`` declarative mins over ``h % p``, 160 at
+    the defaults) and the exact verify derive from it. The previous
     shape rebuilt the gram DAG from raw text per downstream action — five
     full md5 passes (signatures, df count, stats, bitmap build, final
     join) measured 65 s vs ~15 s for the whole query at sf0.1. Docs with
@@ -429,13 +415,7 @@ def minhash_neardup_pairs(
         grams_arr = grams_arr.localCheckpoint()
     if blocks is None:
         blocks = minhash_band_blocks(grams_arr, num_bands, rows_per_band, seed)
-    cands = (
-        blocks.alias("l")
-        .join(blocks.alias("r"), "block_id")
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
+    cands = block_self_join(blocks)
     if candidates_only:
         return cands
     return _exact_jaccard_verify(cands, grams_arr, threshold)

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from entity_matchers_spark.functions.hashing import minhash_permutation_params
+from entity_matchers_spark.operators.blocking import block_self_join
 
 
 def vector_norm(c: Column) -> Column:
@@ -406,6 +407,17 @@ def ivf_topk(
     )
 
 
+def _ivf_cells(
+    corpus: DataFrame, nprobe: int, centroid_stride: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, block_id): each vector's ``nprobe`` nearest centroid cells, as
+    a block table for ``block_self_join``."""
+    cents = _centroids(corpus, id_col, vec_col, centroid_stride)
+    return _assign_cells(corpus, cents, id_col, vec_col, "m", nprobe).select(
+        F.col("m_id").alias("id"), F.col("cid").alias("block_id")
+    )
+
+
 def ivf_neardup_pairs(
     corpus: DataFrame,
     threshold: float = 0.35,
@@ -431,17 +443,7 @@ def ivf_neardup_pairs(
     afterwards (pairs ≫ docs at scale, so candidates stay narrow through
     the shuffle).
     """
-    cents = _centroids(corpus, id_col, vec_col, centroid_stride)
-    cells = _assign_cells(corpus, cents, id_col, vec_col, "m", nprobe).select(
-        F.col("m_id").alias("id"), "cid"
-    )
-    cands = (
-        cells.alias("l")
-        .join(cells.alias("r"), "cid")
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cands = block_self_join(_ivf_cells(corpus, nprobe, centroid_stride, id_col, vec_col))
     base = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
     ).withColumn("norm", vector_norm(F.col("vec")))
@@ -451,59 +453,6 @@ def ivf_neardup_pairs(
         cands.join(a, "id_a")
         .join(b, "id_b")
         .select(
-            "id_a", "id_b",
-            _rounded_cosine_from_norms(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
-            ).alias("cos"),
-        )
-        .where(F.col("cos") >= threshold)
-    )
-
-
-def lsh_neardup_pairs(
-    corpus: DataFrame,
-    threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    num_planes: int = 4,
-    num_tables: int = 8,
-    seed: int = 11037,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via hyperplane-LSH buckets,
-    verified by exact cosine ≥ threshold.
-
-    SCALE CAVEAT: with fixed ``num_planes`` the bucket count is constant
-    (2^planes per table), so candidate pairs grow ∝ n² — callers at scale
-    must grow planes ~log2(n/target_bucket_size) (adding tables to hold
-    recall) or use :func:`ivf_neardup_pairs`, whose candidate count is
-    linear in n by construction. Kept as the recall-tunable small-corpus
-    variant (the MinHash band/row analogy maps directly onto
-    planes/tables).
-    """
-    keys_udf = hyperplane_bucket_keys_udf(dim, num_planes, num_tables, seed)
-    base = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-    ).withColumn("norm", vector_norm(F.col("vec")))
-    b = base.select(
-        "id", "vec", "norm", F.explode(keys_udf(F.col("vec"))).alias("bucket")
-    )
-    cands = (
-        b.alias("l")
-        .join(b.alias("r"), "bucket")
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.col("l.vec").alias("va"),
-            F.col("r.vec").alias("vb"),
-            F.col("l.norm").alias("na"),
-            F.col("r.norm").alias("nb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return (
-        cands.select(
             "id_a", "id_b",
             _rounded_cosine_from_norms(
                 F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
@@ -529,7 +478,8 @@ def lsh_ann_topk(
 
     Each table is an equi-join on a 8-bit bucket id → expected candidate set
     n/256 per table. Recall grows with tables; cost stays ∝ bucket sizes.
-    Bucket bits must grow ~log2(n) at scale (see lsh_neardup_pairs caveat).
+    Bucket bits must grow ~log2(n) at scale: with a fixed plane count the
+    bucket count is constant (2^planes per table), so candidates grow ∝ n².
     """
     from pyspark.sql import Window
 
@@ -584,25 +534,15 @@ def ivf_neardup_audit(
     This is the linear-scaling evidence at a glance: n_candidates /
     n_vectors should stay ≈ nprobe²·stride/2 as the corpus grows (it
     would grow ∝ n under fixed-bucket LSH)."""
-    cents = _centroids(corpus, id_col, vec_col, centroid_stride)
-    cells = _assign_cells(corpus, cents, id_col, vec_col, "m", nprobe).select(
-        F.col("m_id").alias("id"), "cid"
-    )
-    cands = (
-        cells.alias("l")
-        .join(cells.alias("r"), "cid")
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sizes = cells.groupBy("cid").agg(F.count("*").alias("n"))
+    cells = _ivf_cells(corpus, nprobe, centroid_stride, id_col, vec_col)
+    sizes = cells.groupBy("block_id").agg(F.count("*").alias("n"))
     return (
         corpus.agg(F.count("*").alias("n_vectors"))
         .crossJoin(sizes.agg(
             F.count("*").alias("n_cells"),
             F.max("n").alias("max_cell"),
         ))
-        .crossJoin(cands.agg(F.count("*").alias("n_candidates")))
+        .crossJoin(block_self_join(cells).agg(F.count("*").alias("n_candidates")))
     )
 
 

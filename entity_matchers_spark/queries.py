@@ -239,11 +239,13 @@ def _mutual_best_sql(src: str, ka: str, kb: str, score: str, out: str) -> str:
   )"""
 
 
-def _doc_components_sql(edges: str, out: str, label: str) -> str:
+def _doc_components_sql(
+    edges: str, out: str, label: str, nodes: str = "SELECT doc_id FROM documents"
+) -> str:
     """CTEs ending in ``out`` (doc_id, ``label``): connected components of
     the ``edges`` query's (id_a, id_b) graph labelled by min id, every other
-    document a singleton — the oracle of ``clustering.clusters_with_singletons``
-    (needs WITH RECURSIVE)."""
+    ``doc_id`` of the ``nodes`` query a singleton — the oracle of
+    ``clustering.clusters_with_singletons`` (needs WITH RECURSIVE)."""
     return f"""
   {out}_edges AS ({edges}),
   {out}_und AS (
@@ -258,7 +260,7 @@ def _doc_components_sql(edges: str, out: str, label: str) -> str:
   {out}_cc AS (SELECT u AS id, least(u, min(v)) AS cc FROM {out}_reach GROUP BY u),
   {out} AS MATERIALIZED (
     SELECT d.doc_id, coalesce(c.cc, d.doc_id) AS {label}
-    FROM documents d LEFT JOIN {out}_cc c ON d.doc_id = c.id
+    FROM ({nodes}) d LEFT JOIN {out}_cc c ON d.doc_id = c.id
   )"""
 
 
@@ -673,7 +675,8 @@ def q_neardup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q_NEARDUP_RESOLVE_SQL = """
+Q_NEARDUP_RESOLVE_SQL = (
+    """
 WITH RECURSIVE g AS MATERIALIZED (
   SELECT doc_id AS id,
          list_distinct([('0x'||substr(md5(substr(t, i, 7)),1,8))::UBIGINT::BIGINT
@@ -681,27 +684,20 @@ WITH RECURSIVE g AS MATERIALIZED (
   -- same 10k-char cap as the Spark side's shared 7-gram table (_doc_grams7)
   FROM (SELECT doc_id, lower(substr(text, 1, 10000)) AS t FROM documents)
 ),
-edges AS MATERIALIZED (
+nd_pairs AS MATERIALIZED (
   SELECT a.id AS id_a, b.id AS id_b
   FROM g a JOIN g b ON a.id < b.id
   WHERE CASE WHEN len(list_distinct(a.grams || b.grams)) = 0 THEN 0.0
          ELSE len(list_intersect(a.grams, b.grams))
               / len(list_distinct(a.grams || b.grams))::DOUBLE END >= 0.7
-),
-und AS MATERIALIZED (
-  SELECT id_a AS u, id_b AS v FROM edges
-  UNION SELECT id_b AS u, id_a AS v FROM edges
-),
-reach(u, v) AS (
-  SELECT u, v FROM und
-  UNION
-  SELECT r.u, n.v FROM reach r JOIN und n ON r.v = n.u
-),
-cc AS (SELECT u AS id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u)
-SELECT d.doc_id AS id, coalesce(cc.cluster_id, d.doc_id) AS cluster_id,
-       CASE WHEN coalesce(cc.cluster_id, d.doc_id) = d.doc_id THEN 1 ELSE 0 END AS keep
-FROM documents d LEFT JOIN cc ON d.doc_id = cc.id
+),"""
+    + _doc_components_sql("SELECT id_a, id_b FROM nd_pairs", "resolved", "cluster_id")
+    + """
+SELECT doc_id AS id, cluster_id,
+       CASE WHEN cluster_id = doc_id THEN 1 ELSE 0 END AS keep
+FROM resolved
 """
+)
 
 
 # Training-mix sampling fixtures: per-language keep-rates / epoch counts.
@@ -1654,7 +1650,8 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id", "cid", "group_id", "cos_c", "keep")
 
 
-Q_SEMDEDUP_SQL = f"""
+Q_SEMDEDUP_SQL = (
+    f"""
 WITH RECURSIVE emb AS MATERIALIZED (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
 ),
@@ -1680,24 +1677,22 @@ edges AS MATERIALIZED (
   JOIN emb ea ON ea.vec_id = l.id
   JOIN emb eb ON eb.vec_id = r.id
   WHERE round(list_cosine_similarity(ea.v, eb.v), 6) > {SEMDEDUP_TAU}
-),
-und AS MATERIALIZED (
-  SELECT id_a AS u, id_b AS v FROM edges
-  UNION SELECT id_b AS u, id_a AS v FROM edges
-),
-reach(u, v) AS (
-  SELECT u, v FROM und
-  UNION
-  SELECT r.u, n.v FROM reach r JOIN und n ON r.v = n.u
-),
-cc AS MATERIALIZED (SELECT u AS id, least(u, min(v)) AS cluster_id FROM reach GROUP BY u)
-SELECT m.id, m.cid, coalesce(cc.cluster_id, m.id) AS group_id, m.cos_c,
+),"""
+    + _doc_components_sql(
+        "SELECT id_a, id_b FROM edges",
+        "sem_groups",
+        "group_id",
+        nodes="SELECT id AS doc_id FROM memb",
+    )
+    + """
+SELECT m.id, m.cid, g.group_id, m.cos_c,
        CASE WHEN row_number() OVER (
-              PARTITION BY coalesce(cc.cluster_id, m.id)
+              PARTITION BY g.group_id
               ORDER BY m.cos_c ASC, m.id ASC) = 1
             THEN 1 ELSE 0 END AS keep
-FROM memb m LEFT JOIN cc ON m.id = cc.id
+FROM memb m JOIN sem_groups g ON g.doc_id = m.id
 """
+)
 
 
 def q_embedding_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

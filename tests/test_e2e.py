@@ -40,6 +40,28 @@ def test_blocking_recall_on_planted_duplicates(spark, corpus):
     assert metrics.max_block is not None
 
 
+def test_neardup_feed_bands_like_the_er_blocker(spark, corpus):
+    """One LSH builder serves both feeds: banding the hashed 3-gram set
+    table of the capped text through the near-dup feed gives exactly the
+    chain's MinHash keys for every doc that has shingles. Shingle-less docs
+    keep their sentinel keys on the ER side and never enter the index."""
+    from entity_matchers_spark.functions.shingles import hashed_shingle_table
+    from entity_matchers_spark.operators.dedup import minhash_band_blocks
+
+    pages, _ = corpus
+    cfg = PipelineConfig()
+    docs = pages.select(F.col("page_id").alias("id"), "text").unionByName(
+        spark.createDataFrame([(-1, "ab"), (-2, None)], "id long, text string")
+    )
+    grams = hashed_shingle_table(docs, "id", "text", n=cfg.shingle_n, text_cap=cfg.text_cap)
+    got = minhash_band_blocks(grams, cfg.num_bands, cfg.rows_per_band, cfg.seed)
+    keys = cfg.minhash_keys(docs)
+    want = keys.where("id >= 0")
+    assert got.count() == want.count() > 0
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    assert keys.where("id < 0").select("block_id").distinct().count() == cfg.num_bands
+
+
 def test_pairwise_f1_on_labeled_same_block_pairs(spark, corpus):
     """The BASELINE.json acceptance metric: score labeled pairs that share a
     blocking key, threshold, F1 ≥ 0.99."""

@@ -311,7 +311,7 @@ def test_kernel_features_match_scalar_reference(spark):
 
 def test_salted_pairs_equal_plain_self_join(spark):
     import random
-    from entity_matchers_spark.operators.blocking import salted_candidate_pairs
+    from entity_matchers_spark.operators.blocking import block_self_join, salted_candidate_pairs
 
     random.seed(1)
     rows = [(i, f"b{random.randint(0, 3)}") for i in range(300)]
@@ -326,6 +326,7 @@ def test_salted_pairs_equal_plain_self_join(spark):
     salted = salted_candidate_pairs(blocks, chunk_size=37)
     assert exact.exceptAll(salted).count() == 0
     assert salted.exceptAll(exact).count() == 0
+    assert sorted(block_self_join(blocks).collect()) == sorted(exact.collect())
 
 
 def test_word_vector_scan_and_embed(spark, tmp_path):
