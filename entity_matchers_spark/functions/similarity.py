@@ -215,7 +215,11 @@ def levenshtein_ratio_fast(a: Column | str, b: Column | str) -> Column:
     ignores nulls, so a null beside an empty string gives mx = 0 -> 1.0
     (checked before the null guard, as the builtin's expression order
     implies); any other null operand -> null (the kernel itself maps None
-    to "" for lane packing, so the guard is explicit here)."""
+    to "" for lane packing, so the guard is explicit here).
+
+    The guards pick the value, not the work: Spark evaluates the pandas
+    UDF in an ``ArrowEvalPython`` node below the CASE, so the kernel runs
+    on every row, whatever the guards decide."""
     ca = F.col(a) if isinstance(a, str) else a
     cb = F.col(b) if isinstance(b, str) else b
     mx = F.greatest(F.length(ca), F.length(cb))

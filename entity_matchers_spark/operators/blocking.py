@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from entity_matchers_spark.functions.hashing import MINHASH_PRIME, minhash_permutation_params
+from entity_matchers_spark.session import spread_docs
 
 
 def normalized_domain(url: Column | str) -> Column:
@@ -70,9 +71,14 @@ def _gram_hashes(
     """(id, h): the 32-bit md5 prefix of every char n-gram POSITION of the
     lowercased, capped text — plain projections, whole-stage codegen end to
     end. Docs whose text yields no shingle get ONE row with a null ``h``,
-    which ``lsh_signatures`` turns into the sentinel signature."""
+    which ``lsh_signatures`` turns into the sentinel signature.
+
+    The docs are spread by id after the capped text is projected, so only
+    that text moves and the per-position hashing runs on every task slot;
+    the signatures' per-id ``min()`` then reuses that partitioning."""
     t = F.lower(F.substring(F.col(text_col), 1, text_cap))
-    positions = df.select(F.col(id_col).alias("id"), t.alias("t")).select(
+    capped = spread_docs(df.select(F.col(id_col).alias("id"), t.alias("t")))
+    positions = capped.select(
         "id",
         "t",
         F.explode_outer(

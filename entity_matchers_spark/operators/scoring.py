@@ -10,8 +10,7 @@ the *blocked candidate-pair DataFrame*.
 Features per pair (one Arrow batch computes all of them, per the
 north-star's "no per-row Python"):
 - Jaro-Winkler on the name-ish prefix (numpy-vectorized pandas UDF)
-- token-set Levenshtein ratio (batched Myers UDF on capped canonical text,
-  with an identical-string short-circuit)
+- token-set Levenshtein ratio (batched Myers UDF on capped canonical text)
 - 3-gram Jaccard over md5-int shingle sets (allocation-free batch UDF)
 - embedding cosine on hashing-trick token vectors (native zip_with/aggregate)
 
@@ -31,6 +30,7 @@ from entity_matchers_spark.functions.similarity import (
     jaro_winkler_udf,
     levenshtein_ratio_fast,
 )
+from entity_matchers_spark.session import spread_docs
 
 DEFAULT_WEIGHTS = {"jw": 0.25, "tslr": 0.3, "jac3": 0.25, "cos": 0.2}
 # Jaro-Winkler compares the lowercased first NAME_CAP characters.
@@ -90,10 +90,12 @@ def score_pairs(
     raw doubles are bit-equal across engines (cosine inputs are small
     integer counts, so dot and norms are exact).
 
-    Join strategy: two shuffle joins on id (the docs table is the big side,
-    pairs are ~linear in docs); AQE picks sort-merge vs shuffled-hash per
-    stats. Feature math happens after both joins on the already-joined rows
-    — no data motion beyond the two id joins.
+    Join strategy: the per-doc side table joins the pairs twice on id
+    (once per side). The planner picks the strategy from stats: at the
+    benchmarked sizes the side table is broadcast, on larger inputs the
+    joins shuffle. Feature math happens after both joins on the
+    already-joined rows; the three pandas UDFs share one
+    ``ArrowEvalPython`` node, i.e. one Arrow round trip per batch.
     """
     w = weights or DEFAULT_WEIGHTS
     # The feature select is compute-bound (pandas UDF + levenshtein); spread
@@ -104,8 +106,9 @@ def score_pairs(
     # whole stage; finer tasks level the tail.
     sc = pairs.sparkSession.sparkContext
     pairs = pairs.repartition(3 * sc.defaultParallelism, "id_a", "id_b")
-    # per-doc features computed ONCE map-side; the pair rows carry only the
-    # capped name/canon strings + hashed gram set — never the raw text
+    # per-doc features computed ONCE per doc, spread over every task slot
+    # (spread_docs); the pair rows carry only the capped name/canon strings
+    # + hashed gram set — never the raw text
     canon = F.substring(
         F.concat_ws(
             " ",
@@ -120,7 +123,7 @@ def score_pairs(
     # ship the scalar, so the per-pair cosine is one zip_with dot, not three
     vec = hashed_token_vector(F.col(text_col))
     norm = F.sqrt(F.aggregate(vec, F.lit(0.0), lambda acc, v: acc + v * v))
-    sides = docs.select(
+    sides = spread_docs(docs, id_col).select(
         F.col(id_col).alias("id"),
         F.lower(F.substring(F.col(text_col), 1, name_cap)).alias("name"),
         canon.alias("canon"),
@@ -133,9 +136,9 @@ def score_pairs(
         return sides.select(*[F.col(c).alias(f"{c}_{s}") for c in sides.columns])
 
     joined = pairs.join(side("a"), "id_a").join(side("b"), "id_b")
-    # identical strings shortcut: CASE short-circuits, so the quadratic
-    # levenshtein runs only when the canonical strings actually differ
-    # (near-dup-heavy inputs hit the fast branch often)
+    # equal canonical strings score 1.0 by the CASE, but the levenshtein
+    # pandas UDF still runs on every row: Spark evaluates it in the
+    # ArrowEvalPython node below the CASE
     tslr = F.when(F.col("canon_a") == F.col("canon_b"), F.lit(1.0)).otherwise(
         levenshtein_ratio_fast("canon_a", "canon_b")
     )

@@ -42,7 +42,7 @@ class CurationConfig:
     default_lang_rate: float = 1.0
     seq_len: int = 1024
     n_shards: int = 16
-    format: str = "parquet"  # "iceberg" on a cluster with the runtime jar
+    format: str = "parquet"  # the only format with a lineage source here
 
 
 class CurationPipeline(CheckpointedPipeline):
@@ -61,7 +61,7 @@ class CurationPipeline(CheckpointedPipeline):
 
     # -- stage bodies -------------------------------------------------------
 
-    def _build(self, stage: str, docs: DataFrame) -> DataFrame:
+    def _build(self, stage: str, docs: DataFrame, tables: dict[str, DataFrame]) -> DataFrame:
         from entity_matchers_spark.functions.shingles import tokens
         from entity_matchers_spark.operators.dedup import (
             exact_duplicates,
@@ -92,7 +92,7 @@ class CurationPipeline(CheckpointedPipeline):
             )
         prev = {"scrub": "filter", "dedup": "scrub", "select": "dedup",
                 "pack": "select"}[stage]
-        cur = self.read(prev)
+        cur = tables[prev]
         if stage == "scrub":
             clean = pii_scrub(cur, id_col="id", text_col="text")
             return (

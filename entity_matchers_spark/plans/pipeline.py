@@ -3,27 +3,30 @@
 The reference checkpoints by pickling each stage's output and resuming from
 files on disk (/root/reference/bert-int/run_full_bert.py:46-64; every
 interaction_model stage starts with pickle.load). The Spark-native analog:
-every stage writes a table + a metrics/lineage row; a rerun skips stages
-whose committed output exists (``_SUCCESS`` marker — the same contract an
-Iceberg snapshot commit provides; the writer format is a constructor arg so
-``iceberg`` slots in unchanged on a cluster with the runtime jar).
+every stage writes a parquet table + a metrics/lineage file; a rerun skips
+stages whose committed output exists (``_SUCCESS`` marker — the same
+contract an Iceberg snapshot commit provides). ``PipelineConfig.format``
+names the table format, but only ``parquet`` runs: Iceberg waits for its
+runtime jar, and with it a lineage source (its snapshot metadata).
 
 Stages (SURVEY.md §7):
   extract → blocks → pairs → scores → matches → clusters
 
-Each stage records per-partition lineage (partition id → row count) plus
-wall-clock into ``<root>/_metrics/<stage>.json`` — the north rule's
-"per-partition lineage + metrics" requirement, and the analog of the
+Each stage records per-file lineage (committed ``part-*`` file → row
+count, read from the parquet footers on the driver, no Spark job) plus
+wall-clock into ``<root>/_metrics/<stage>.json`` — the analog of the
 reference's blocking stats.csv audit (README.md:380-383).
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,7 +56,7 @@ class PipelineConfig:
     weights: dict[str, float] = field(
         default_factory=lambda: dict(scoring.DEFAULT_WEIGHTS)
     )
-    format: str = "parquet"  # "iceberg" on a cluster with the runtime jar
+    format: str = "parquet"  # the only format with a lineage source here
 
     def minhash_keys(self, docs: DataFrame) -> DataFrame:
         """(id, block_id): MinHash-LSH band keys over ``text``."""
@@ -112,13 +115,17 @@ class CheckpointedPipeline:
         return self.spark.read.format(self.config.format).load(self._path(stage))
 
     def _commit(self, stage: str, df: DataFrame, started: float) -> DataFrame:
-        df.write.format(self.config.format).mode("overwrite").save(self._path(stage))
-        out = self.read(stage)
+        if self.config.format != "parquet":
+            raise ValueError(
+                f"format {self.config.format!r} has no lineage source: per-file "
+                "row counts come from parquet footers, and an Iceberg table's "
+                "would come from its snapshot metadata, which needs the runtime jar"
+            )
+        path = self._path(stage)
+        df.write.format("parquet").mode("overwrite").save(path)
         lineage = {
-            str(r["pid"]): r["rows"]
-            for r in out.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
+            os.path.basename(f): pq.read_metadata(f).num_rows
+            for f in sorted(glob.glob(f"{path}/part-*"))
         }
         metrics = {
             "stage": stage,
@@ -131,11 +138,13 @@ class CheckpointedPipeline:
         os.makedirs(f"{self.root}/_metrics", exist_ok=True)
         with open(f"{self.root}/_metrics/{stage}.json", "w") as f:
             json.dump(metrics, f, indent=2)
-        return out
+        # open it with the written schema: inferring one runs a Spark job
+        return self.spark.read.schema(df.schema).parquet(path)
 
     # -- stage bodies -------------------------------------------------------
 
-    def _build(self, stage: str, pages: DataFrame) -> DataFrame:
+    def _build(self, stage: str, pages: DataFrame, tables: dict[str, DataFrame]) -> DataFrame:
+        """Stage ``stage``'s output over the committed ``tables`` before it."""
         c = self.config
         if stage == "extract":
             extracted = with_extracted_text(pages, "html", "extracted_text")
@@ -143,32 +152,32 @@ class CheckpointedPipeline:
                 F.col("page_id").alias("id"), "url", "warc_ts", "lang",
                 F.col("extracted_text").alias("text"),
             )
-        docs = self.read("extract")
+        docs = tables["extract"]
         if stage == "blocks":
             return c.blocks(
                 docs.select("id", "text", blocking.normalized_domain("url").alias("domain"))
             )
         if stage == "pairs":
-            return c.pairs(self.read("blocks"))
+            return c.pairs(tables["blocks"])
         if stage == "scores":
-            return c.scores(self.read("pairs"), docs)
+            return c.scores(tables["pairs"], docs)
         if stage == "matches":
-            return c.matches(self.read("scores"))
+            return c.matches(tables["scores"])
         if stage == "clusters":
-            return clustering.clusters_with_singletons(docs, self.read("matches"))
+            return clustering.clusters_with_singletons(docs, tables["matches"])
         raise ValueError(f"unknown stage {stage}")
 
     # -- public API ---------------------------------------------------------
 
-    def run(self, pages: DataFrame, through: str = "clusters") -> DataFrame:
-        last = None
-        for stage in self.STAGES:
+    def run(self, pages: DataFrame, through: str | None = None) -> DataFrame:
+        """Run the uncommitted stages up to ``through`` (default: the last)
+        and return its table."""
+        through = through or self.STAGES[-1]
+        tables: dict[str, DataFrame] = {}
+        for stage in self.STAGES[: self.STAGES.index(through) + 1]:
             if self.is_committed(stage):
-                last = self.read(stage)
+                tables[stage] = self.read(stage)
             else:
                 started = time.time()
-                last = self._commit(stage, self._build(stage, pages), started)
-            if stage == through:
-                break
-        assert last is not None
-        return last
+                tables[stage] = self._commit(stage, self._build(stage, pages, tables), started)
+        return tables[through]

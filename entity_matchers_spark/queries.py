@@ -35,15 +35,12 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents table, spread across all cores: the test parquet is a
-    single row group (1 scan task), but every documents query is compute-
-    bound (shingling, hashing, string math) — repartition by id so the
-    per-doc work parallelizes. On a many-file production table the scan is
-    already wide and this collapses into the downstream shuffle."""
-    from entity_matchers_spark.session import default_partitions
+    """documents table, spread across all cores by ``doc_id``: the test
+    parquet is a single row group, and every documents query does compute-
+    bound per-doc work (``session.spread_docs``)."""
+    from entity_matchers_spark.session import spread_docs
 
-    docs = _read(spark, sf_dir, "documents")
-    return docs.repartition(default_partitions(spark), "doc_id")
+    return spread_docs(_read(spark, sf_dir, "documents"), "doc_id")
 
 
 # Several registry queries share the ER chain prefix (blocks → pairs →

@@ -11,7 +11,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+# the directory that holds the ``entity_matchers_spark`` package
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -118,6 +121,14 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
+    # Python workers import the UDF modules by name; put the package's
+    # parent on their path, ahead of (not instead of) any inherited one,
+    # so a driver that found the package only through its own sys.path
+    # does not fail its first UDF stage with ModuleNotFoundError.
+    worker_path = os.pathsep.join(
+        p for p in (PACKAGE_PARENT, os.environ.get("PYTHONPATH")) if p
+    )
+    builder = builder.config("spark.executorEnv.PYTHONPATH", worker_path)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
@@ -194,3 +205,17 @@ def default_partitions(spark: SparkSession) -> int:
     joins) — at production scale the same repartition is the shuffle the
     stage would do anyway."""
     return spark.sparkContext.defaultParallelism
+
+
+def spread_docs(docs: DataFrame, id_col: str = "id") -> DataFrame:
+    """``docs`` hash-partitioned by ``id_col`` across ``default_partitions``.
+
+    Per-document work (shingling, MinHash, the scoring side table) is
+    compute-bound on small data: a documents table that is one parquet row
+    group scans as ONE task, and size-based planning never widens it, so
+    that work would run serially. Spreading by id puts it on every task
+    slot, and an aggregate keyed by the same id (MinHash's per-doc
+    ``min()``) then needs no shuffle of its own. On a many-file production
+    table the scan is already wide and this is the shuffle a downstream
+    id-keyed operator would do anyway."""
+    return docs.repartition(default_partitions(docs.sparkSession), id_col)

@@ -2,14 +2,18 @@
 
 - blocking pair-recall on planted duplicates
 - pairwise F1 ≥ 0.99 on labeled pairs sharing a blocking key
-- kill-and-rerun resume: identical final cluster table (FIXTURES.md §4)
+- kill-and-rerun resume: identical final cluster table (FIXTURES.md §4),
+  with each stage's ``_metrics`` lineage describing its committed files
 - oracle parity: the chain's blocks → pairs and ``score_pairs`` equal the
   DuckDB ``er_candidate_pairs`` and ``er_pair_scores`` oracles
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -95,6 +99,8 @@ def test_pipeline_resume_identical(spark, corpus, tmp_path_factory):
     resumed_rows = sorted(tuple(r) for r in resumed.collect())
 
     assert full_rows == resumed_rows
+    for root in (root_a, root_b):
+        _assert_metrics_describe_tables(spark, root)
 
     # cluster quality vs planted truth on the full run
     truth = labels.where("label = 1").select("id_a", "id_b")
@@ -103,6 +109,52 @@ def test_pipeline_resume_identical(spark, corpus, tmp_path_factory):
 
     shutil.rmtree(root_a, ignore_errors=True)
     shutil.rmtree(root_b, ignore_errors=True)
+
+
+def _assert_metrics_describe_tables(spark, root):
+    """Every stage's ``_metrics/<stage>.json`` counts the committed table's
+    rows, one lineage entry per committed ``part-*`` file."""
+    for stage in CheckpointedPipeline.STAGES:
+        with open(f"{root}/_metrics/{stage}.json") as f:
+            m = json.load(f)
+        rows = spark.read.parquet(f"{root}/{stage}").count()
+        files = glob.glob(f"{root}/{stage}/part-*")
+        assert m["stage"] == stage
+        assert m["rows"] == rows, (stage, m["rows"], rows)
+        assert m["partitions"] == len(files), (stage, m["partitions"], len(files))
+        assert sum(m["partition_rows"].values()) == rows, stage
+
+
+def test_pipeline_commit_rejects_formats_without_lineage(spark, tmp_path):
+    """Only parquet has a lineage source; any other format fails before a
+    byte is written."""
+    pipe = CheckpointedPipeline(spark, str(tmp_path), PipelineConfig(format="iceberg"))
+    with pytest.raises(ValueError, match="iceberg"):
+        pipe._commit("extract", spark.range(3), time.time())
+    assert not pipe.is_committed("extract")
+
+
+def test_score_pairs_plan_one_arrow_node_over_spread_docs(spark):
+    """The three scoring UDFs share ONE ``ArrowEvalPython`` node, and a
+    one-partition docs input reaches the side-table projection through a
+    hash exchange on the id."""
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} text") for i in range(6)], "id long, text string"
+    ).coalesce(1)
+    pairs = spark.createDataFrame([(0, 1), (2, 3)], "id_a long, id_b long")
+    scored = scoring.score_pairs(pairs, docs)
+    plan = spark._jvm.PythonSQLUtils.explainString(scored._jdf.queryExecution(), "simple")
+    arrow = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    assert len(arrow) == 1, plan
+    # the Myers levenshtein kernel's UDF is named _lev
+    for udf in ("jaro_winkler_udf(", "_lev(", "jaccard_hashed_udf("):
+        assert udf in arrow[0], (udf, arrow[0])
+    lines = plan.splitlines()
+    side = [i for i, ln in enumerate(lines) if " AS canon_" in ln]
+    assert side, plan
+    for i in side:
+        below = lines[i + 1].strip(" :+-")
+        assert below.startswith("Exchange hashpartitioning(id#"), (lines[i], lines[i + 1])
 
 
 def _assert_chain_matches_oracle(spark, build, oracle_sql):
