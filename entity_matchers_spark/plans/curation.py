@@ -42,7 +42,6 @@ class CurationConfig:
     default_lang_rate: float = 1.0
     seq_len: int = 1024
     n_shards: int = 16
-    format: str = "parquet"  # the only format with a lineage source here
 
 
 class CurationPipeline(CheckpointedPipeline):

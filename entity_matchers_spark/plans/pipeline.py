@@ -5,9 +5,9 @@ files on disk (/root/reference/bert-int/run_full_bert.py:46-64; every
 interaction_model stage starts with pickle.load). The Spark-native analog:
 every stage writes a parquet table + a metrics/lineage file; a rerun skips
 stages whose committed output exists (``_SUCCESS`` marker — the same
-contract an Iceberg snapshot commit provides). ``PipelineConfig.format``
-names the table format, but only ``parquet`` runs: Iceberg waits for its
-runtime jar, and with it a lineage source (its snapshot metadata).
+contract an Iceberg snapshot commit provides). Stage tables are parquet:
+Iceberg waits for its runtime jar, and with it a lineage source (its
+snapshot metadata).
 
 Stages (SURVEY.md §7):
   extract → blocks → pairs → scores → matches → clusters
@@ -56,7 +56,6 @@ class PipelineConfig:
     weights: dict[str, float] = field(
         default_factory=lambda: dict(scoring.DEFAULT_WEIGHTS)
     )
-    format: str = "parquet"  # the only format with a lineage source here
 
     def minhash_keys(self, docs: DataFrame) -> DataFrame:
         """(id, block_id): MinHash-LSH band keys over ``text``."""
@@ -112,21 +111,17 @@ class CheckpointedPipeline:
         return os.path.exists(f"{self._path(stage)}/_SUCCESS")
 
     def read(self, stage: str) -> DataFrame:
-        return self.spark.read.format(self.config.format).load(self._path(stage))
+        return self.spark.read.parquet(self._path(stage))
 
     def _commit(self, stage: str, df: DataFrame, started: float) -> DataFrame:
-        if self.config.format != "parquet":
-            raise ValueError(
-                f"format {self.config.format!r} has no lineage source: per-file "
-                "row counts come from parquet footers, and an Iceberg table's "
-                "would come from its snapshot metadata, which needs the runtime jar"
-            )
         path = self._path(stage)
-        df.write.format("parquet").mode("overwrite").save(path)
-        lineage = {
-            os.path.basename(f): pq.read_metadata(f).num_rows
-            for f in sorted(glob.glob(f"{path}/part-*"))
-        }
+        df.write.mode("overwrite").parquet(path)
+        parts = sorted(glob.glob(os.path.join(glob.escape(path), "part-*")))
+        if not parts:
+            # the parquet writer leaves at least one part file, even for an
+            # empty table: none found means ``path`` is not a local directory
+            raise ValueError(f"no part-* files under {path!r}: lineage needs a local root")
+        lineage = {os.path.basename(f): pq.read_metadata(f).num_rows for f in parts}
         metrics = {
             "stage": stage,
             "rows": sum(lineage.values()),

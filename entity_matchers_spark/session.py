@@ -215,7 +215,7 @@ def spread_docs(docs: DataFrame, id_col: str = "id") -> DataFrame:
     group scans as ONE task, and size-based planning never widens it, so
     that work would run serially. Spreading by id puts it on every task
     slot, and an aggregate keyed by the same id (MinHash's per-doc
-    ``min()``) then needs no shuffle of its own. On a many-file production
-    table the scan is already wide and this is the shuffle a downstream
-    id-keyed operator would do anyway."""
+    ``min()``) then needs no shuffle of its own. Measured only on such a
+    one-row-group input (perfbench er_fresh); what the extra exchange costs
+    on a many-file table, where the scan is already wide, is unmeasured."""
     return docs.repartition(default_partitions(docs.sparkSession), id_col)

@@ -125,13 +125,13 @@ def _assert_metrics_describe_tables(spark, root):
         assert sum(m["partition_rows"].values()) == rows, stage
 
 
-def test_pipeline_commit_rejects_formats_without_lineage(spark, tmp_path):
-    """Only parquet has a lineage source; any other format fails before a
-    byte is written."""
-    pipe = CheckpointedPipeline(spark, str(tmp_path), PipelineConfig(format="iceberg"))
-    with pytest.raises(ValueError, match="iceberg"):
+def test_pipeline_commit_refuses_lineage_it_cannot_read(spark, tmp_path):
+    """A root the writer accepts but the driver cannot list (a ``file://``
+    URI) fails the commit instead of recording zero rows."""
+    pipe = CheckpointedPipeline(spark, f"file://{tmp_path}")
+    with pytest.raises(ValueError, match="part-"):
         pipe._commit("extract", spark.range(3), time.time())
-    assert not pipe.is_committed("extract")
+    assert not (tmp_path / "_metrics").exists()
 
 
 def test_score_pairs_plan_one_arrow_node_over_spread_docs(spark):
