@@ -10,7 +10,8 @@ its closed neighborhood, then labels are shortcut one hop
 (label := label(label)) — the pointer-jumping step squares chain lengths,
 so convergence is O(log diameter) rounds instead of O(diameter) (the
 Kiveris et al. MapReduce-CC insight; a 7k-node blocking blob converged in
-5 rounds instead of ~30). Stop when no label changes.
+5 rounds instead of ~30). Stop when no label changes; raise when
+``max_iterations`` runs out first.
 
 Scale discipline:
 - each iteration is one groupBy(node).min(label) over the (bidirectional)
@@ -73,7 +74,11 @@ def connected_components(
     ~0.1 s collected). Identical output by construction — cluster_id is
     the component-minimum either way — and the distributed loop runs
     unchanged above the threshold, so the operator stays shape-correct at
-    any scale; the bound plays the same runtime-statistics role as AQE."""
+    any scale; the bound plays the same runtime-statistics role as AQE.
+
+    Raises ``RuntimeError`` when ``max_iterations`` propagation steps run
+    out while labels are still changing: unconverged labels would split
+    components silently."""
     base = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     loop_parts: int | None = None
     if checkpoint:
@@ -142,8 +147,10 @@ def connected_components(
         changed = flagged.where(F.col("_chg")).count()
         labels = flagged.drop("_chg")
         if changed == 0:
-            break
-    return labels
+            return labels
+    raise RuntimeError(
+        f"connected_components: labels still changing after {max_iterations} iterations"
+    )
 
 
 def _driver_union_find(base: DataFrame) -> DataFrame:

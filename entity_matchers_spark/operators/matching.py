@@ -16,6 +16,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from entity_matchers_spark.session import default_partitions
 
 
 def _bipartite_node_exprs(scored: DataFrame):
@@ -292,10 +301,10 @@ def stable_marriage_components(
     component of the bipartite candidate graph, so the suitor-optimal
     matching is the disjoint union of the per-component ones), but solves
     it with ONE hash-min connected-components pass plus one sequential
-    Gale-Shapley per component inside ``applyInPandas`` — collapsing the
-    round-based loop's O(longest trade-up chain) scheduler round-trips
-    (~20 jobs at sf0.1) into two shuffles. Reference semantics:
-    ``stable_alignment`` + ``galeshapley``
+    Gale-Shapley per component in the streamed per-component driver
+    :func:`_per_component` — collapsing the round-based loop's O(longest
+    trade-up chain) scheduler round-trips (~20 jobs at sf0.1) into a few
+    shuffles. Reference semantics: ``stable_alignment`` + ``galeshapley``
     (/root/reference/OpenEA_Mod/src/openea/modules/finding/alignment.py:
     92-148,180-233); same tie-break (score desc, partner id asc).
 
@@ -306,74 +315,79 @@ def stable_marriage_components(
     in bounded per-round memory: one pathological block degrades locally
     instead of OOMing an executor or aborting the job.
     """
-    import pandas as pd
+    import functools
 
     pairs, comp = _by_component(scored, score_col)
-    sizes = comp.groupBy("cluster_id").agg(F.count("*").alias("_csz"))
-    pairs = pairs.join(sizes, "cluster_id")
-    out_schema = pairs.select("id_a", "id_b", "score").schema
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        la, ia = np.unique(pdf["id_a"].to_numpy(), return_inverse=True)
-        lb, ib = np.unique(pdf["id_b"].to_numpy(), return_inverse=True)
-        s = pdf["score"].to_numpy(dtype=np.float64)
-        m = s.size
-        # Suitor preference lists: edges grouped by suitor, each group
-        # ordered (score desc, reviewer id asc) — one stable lexsort.
-        order_a = np.lexsort((ib, -s, ia))
-        ga = ia[order_a]
-        astarts = np.r_[0, np.flatnonzero(ga[1:] != ga[:-1]) + 1]
-        aends = np.r_[astarts[1:], m]
-        # Reviewer ranks: position of each edge within its reviewer's
-        # (score desc, suitor id asc) ordering.
-        order_b = np.lexsort((ia, -s, ib))
-        gb = ib[order_b]
-        bstarts = np.r_[0, np.flatnonzero(gb[1:] != gb[:-1]) + 1]
-        blens = np.diff(np.r_[bstarts, m])
-        rank_b = np.empty(m, dtype=np.int64)
-        rank_b[order_b] = np.arange(m) - np.repeat(bstarts, blens)
-        # Deferred acceptance: each proposal consumes one list entry, so
-        # the loop is O(edges) for the whole component — per-row Python is
-        # fine here because max_component bounds the component.
-        ptr = astarts.copy()
-        cur_edge = np.full(lb.size, -1, dtype=np.int64)
-        free = list(range(la.size))
-        while free:
-            a = free.pop()
-            while ptr[a] < aends[a]:
-                e = order_a[ptr[a]]
-                ptr[a] += 1
-                b = ib[e]
-                ce = cur_edge[b]
-                if ce < 0:
-                    cur_edge[b] = e
-                    break
-                if rank_b[e] < rank_b[ce]:
-                    cur_edge[b] = e
-                    free.append(ia[ce])
-                    break
-            # list exhausted -> suitor stays unmatched
-        matched = cur_edge[cur_edge >= 0]
-        return pd.DataFrame(
-            {"id_a": la[ia[matched]], "id_b": lb[ib[matched]], "score": s[matched]}
-        )
-
-    small = pairs.where(F.col("_csz") <= max_component)
-    out = small.groupBy("cluster_id").applyInPandas(solve, out_schema)
+    out = _per_component(
+        pairs,
+        functools.partial(_gale_shapley, max_component=max_component),
+        pairs.select("id_a", "id_b", "score").schema,
+    )
     # Oversize routing decided from the tiny per-component size table (one
     # aggregate over the checkpointed CC labels) — NOT by evaluating the
     # full edges⋈labels join a second time just to test emptiness.
+    sizes = comp.groupBy("cluster_id").agg(F.count("*").alias("_csz"))
     max_sz = sizes.agg(F.max("_csz")).first()[0] or 0
     if max_sz > max_component:
-        big = pairs.where(F.col("_csz") > max_component)
+        big = pairs.join(sizes.where(F.col("_csz") > max_component), "cluster_id")
         out = out.unionByName(
             stable_marriage(big.select("id_a", "id_b", "score"), score_col="score")
         )
     if score_col != "score":
         out = out.withColumnRenamed("score", score_col)
     return out.select("id_a", "id_b", score_col)
+
+
+def _gale_shapley(id_a, id_b, score, max_component: int):
+    """Suitor-optimal deferred acceptance on ONE component's edge arrays
+    (preferences: score desc, partner id asc). Returns the matched
+    ``(id_a, id_b, score)`` arrays; empty ones for a component of more
+    than ``max_component`` nodes, which the round-based loop solves."""
+    import numpy as np
+
+    la, ia = np.unique(id_a, return_inverse=True)
+    lb, ib = np.unique(id_b, return_inverse=True)
+    s = score.astype(np.float64, copy=False)
+    if la.size + lb.size > max_component:
+        return id_a[:0], id_b[:0], s[:0]
+    m = s.size
+    # Suitor preference lists: edges grouped by suitor, each group
+    # ordered (score desc, reviewer id asc) — one stable lexsort.
+    order_a = np.lexsort((ib, -s, ia))
+    ga = ia[order_a]
+    astarts = np.r_[0, np.flatnonzero(ga[1:] != ga[:-1]) + 1]
+    aends = np.r_[astarts[1:], m]
+    # Reviewer ranks: position of each edge within its reviewer's
+    # (score desc, suitor id asc) ordering.
+    order_b = np.lexsort((ia, -s, ib))
+    gb = ib[order_b]
+    bstarts = np.r_[0, np.flatnonzero(gb[1:] != gb[:-1]) + 1]
+    blens = np.diff(np.r_[bstarts, m])
+    rank_b = np.empty(m, dtype=np.int64)
+    rank_b[order_b] = np.arange(m) - np.repeat(bstarts, blens)
+    # Deferred acceptance: each proposal consumes one list entry, so
+    # the loop is O(edges) for the whole component — per-row Python is
+    # fine here because max_component bounds the component.
+    ptr = astarts.copy()
+    cur_edge = np.full(lb.size, -1, dtype=np.int64)
+    free = list(range(la.size))
+    while free:
+        a = free.pop()
+        while ptr[a] < aends[a]:
+            e = order_a[ptr[a]]
+            ptr[a] += 1
+            b = ib[e]
+            ce = cur_edge[b]
+            if ce < 0:
+                cur_edge[b] = e
+                break
+            if rank_b[e] < rank_b[ce]:
+                cur_edge[b] = e
+                free.append(ia[ce])
+                break
+        # list exhausted -> suitor stays unmatched
+    matched = cur_edge[cur_edge >= 0]
+    return la[ia[matched]], lb[ib[matched]], s[matched]
 
 
 def resolve_conflicts(
@@ -469,6 +483,72 @@ def hard_negatives(
     )
 
 
+def _per_component(pairs: DataFrame, solve, schema: StructType) -> DataFrame:
+    """Run ``solve(id_a, id_b, score)`` on every connected component of
+    ``pairs`` (``id_a``, ``id_b``, ``score``, ``cluster_id``): the one
+    per-component driver of :func:`mwgm_exact`, :func:`mwgm_exact_duals`
+    and :func:`stable_marriage_components`. ``solve`` takes one
+    component's edge arrays and returns its output columns, in
+    ``schema``'s order, as arrays.
+
+    The edges are hash-partitioned by ``cluster_id`` into
+    ``default_partitions`` — an explicit count, which AQE does not coalesce
+    (a grouped shuffle this small is merged into ONE task, although its
+    per-component solves are compute-bound) — and sorted within each
+    partition by ``(cluster_id, id_a, id_b)``. One ``mapInPandas`` per
+    partition then streams the sorted Arrow batches through
+    :func:`_stream_components`, so each task pays one Arrow round trip
+    per batch rather than one per component.
+    """
+    ordered = (
+        pairs.select("cluster_id", "id_a", "id_b", "score")
+        .repartition(default_partitions(pairs.sparkSession), "cluster_id")
+        .sortWithinPartitions("cluster_id", "id_a", "id_b")
+    )
+    names = schema.fieldNames()
+    return ordered.mapInPandas(
+        lambda batches: _stream_components(batches, solve, names), schema
+    )
+
+
+def _stream_components(batches, solve, names):
+    """``solve`` over the components of ``batches``: pandas frames sorted by
+    ``cluster_id``, as one task of :func:`_per_component` receives them.
+    Each batch is cut where ``cluster_id`` changes; the last component of
+    a batch may go on in the next one, so it stays open until a batch
+    starts another component or the stream ends. Yields one frame of
+    ``names`` columns per batch that completed a component."""
+    import numpy as np
+    import pandas as pd
+
+    def solved(parts):
+        return solve(*(np.concatenate(c) for c in zip(*parts)))
+
+    def frame(outs):
+        return pd.DataFrame(
+            {n: np.concatenate([o[k] for o in outs]) for k, n in enumerate(names)}
+        )
+
+    open_cid, open_parts = None, []
+    for pdf in batches:
+        cid = pdf["cluster_id"].to_numpy()
+        if cid.size == 0:
+            continue
+        cols = [pdf[c].to_numpy() for c in ("id_a", "id_b", "score")]
+        bounds = np.r_[0, np.flatnonzero(cid[1:] != cid[:-1]) + 1, cid.size]
+        outs = []
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
+            if open_parts and cid[lo] != open_cid:
+                outs.append(solved(open_parts))
+                open_parts = []
+            open_cid = cid[lo]
+            open_parts.append([c[lo:hi] for c in cols])
+        if outs:
+            yield frame(outs)
+    if open_parts:
+        yield frame([solved(open_parts)])
+
+
 # Components above this many nodes get the greedy 1/2-approximation
 # instead of the exact sparse Hungarian (no duals: reported as uncertified).
 MAX_COMPONENT = 50_000
@@ -498,6 +578,10 @@ def _sparse_hungarian_max(ia, ib, wj, nl, nr):
     ``(match_l, ya, yb)`` with ``match_l[i]`` the matched right index or
     -1.  Deterministic for distinct (jittered) weights; heap ties break
     on the right-node index.
+
+    Each search keeps its labels (distance, predecessor, finalized) in
+    dicts over the rights it reaches, so it costs the edges it scans, not
+    ``nr``: a component's work has no O(nl·nr) floor.
     """
     import heapq
 
@@ -514,36 +598,35 @@ def _sparse_hungarian_max(ia, ib, wj, nl, nr):
     v = np.zeros(nr)
     match_l = np.full(nl, -1, dtype=np.int64)
     match_r = np.full(nr, -1, dtype=np.int64)
+    inf = float("inf")
     for s in range(nl):
         if indptr[s] == indptr[s + 1]:
             u[s] = 0.0  # isolated left: unmatched with zero dual
             continue
-        dist = np.full(nr, np.inf)
-        finalized = np.zeros(nr, dtype=bool)
-        prev_r = np.full(nr, -1, dtype=np.int64)
+        dist: dict = {}
+        prev_r: dict = {}
+        finalized: set = set()
         t_left = {s: 0.0}
         best_dummy_val, best_dummy_left = -u[s], s
         heap: list = []
         lo, hi = indptr[s], indptr[s + 1]
         nd = c_s[lo:hi] - u[s] - v[ib_s[lo:hi]]
-        for jj, dd in zip(ib_s[lo:hi], nd):
-            if dd < dist[jj]:
+        for jj, dd in zip(ib_s[lo:hi].tolist(), nd.tolist()):
+            if dd < dist.get(jj, inf):
                 dist[jj] = dd
                 prev_r[jj] = s
-                heapq.heappush(heap, (dd, int(jj)))
+                heapq.heappush(heap, (dd, jj))
         target_right = -1
         target_left = -1
         while True:
-            while heap and (
-                finalized[heap[0][1]] or heap[0][0] > dist[heap[0][1]]
-            ):
+            while heap and (heap[0][1] in finalized or heap[0][0] > dist[heap[0][1]]):
                 heapq.heappop(heap)
             if not heap or best_dummy_val < heap[0][0]:
                 target_left = best_dummy_left
                 big_d = best_dummy_val
                 break
             d_j, j = heapq.heappop(heap)
-            finalized[j] = True
+            finalized.add(j)
             i2 = match_r[j]
             if i2 < 0:
                 target_right = j
@@ -555,15 +638,16 @@ def _sparse_hungarian_max(ia, ib, wj, nl, nr):
                 best_dummy_val, best_dummy_left = cand, i2
             lo, hi = indptr[i2], indptr[i2 + 1]
             nd = d_j + c_s[lo:hi] - u[i2] - v[ib_s[lo:hi]]
-            for jj, dd in zip(ib_s[lo:hi], nd):
-                if not finalized[jj] and dd < dist[jj]:
+            for jj, dd in zip(ib_s[lo:hi].tolist(), nd.tolist()):
+                if jj not in finalized and dd < dist.get(jj, inf):
                     dist[jj] = dd
                     prev_r[jj] = i2
-                    heapq.heappush(heap, (dd, int(jj)))
+                    heapq.heappush(heap, (dd, jj))
         for i2, t in t_left.items():
             u[i2] += big_d - t
-        fin = finalized & (dist < big_d)
-        v[fin] += dist[fin] - big_d
+        for j in finalized:
+            if dist[j] < big_d:
+                v[j] += dist[j] - big_d
         if target_right >= 0:
             j = target_right
         elif target_left == s:
@@ -620,8 +704,8 @@ def _greedy_component_match(ia, ib, wj, n_a, n_b):
     return rows, cols
 
 
-def _solve_component(pdf, max_component: int):
-    """Match one connected component's edges (pandas ``id_a``/``id_b``/
+def _solve_component(id_a, id_b, score, max_component: int):
+    """Match one connected component's edges (arrays ``id_a``, ``id_b``,
     ``score``): the shared per-component solve of :func:`mwgm_exact` and
     :func:`mwgm_exact_duals`.
 
@@ -641,14 +725,14 @@ def _solve_component(pdf, max_component: int):
 
     import numpy as np
 
-    la, ia = np.unique(pdf["id_a"].to_numpy(), return_inverse=True)
-    lb, ib = np.unique(pdf["id_b"].to_numpy(), return_inverse=True)
-    s = pdf["score"].to_numpy(dtype=np.float64)
+    la, ia = np.unique(id_a, return_inverse=True)
+    lb, ib = np.unique(id_b, return_inverse=True)
+    s = score.astype(np.float64, copy=False)
     jitter = np.array(
         [
             int.from_bytes(hashlib.md5(f"{a}\t{b}".encode()).digest()[:4], "big")
             / 2**32
-            for a, b in zip(pdf["id_a"], pdf["id_b"])
+            for a, b in zip(id_a.tolist(), id_b.tolist())
         ]
     )
     wj = s + 1e-9 * jitter
@@ -674,9 +758,10 @@ def mwgm_exact(
     driver-side library call — unusable at 10^12 docs. The matching
     polytope decomposes over connected components, so the distributed
     shape is: hash-min connected components over the candidate edges, then
-    one exact sparse Hungarian solve PER COMPONENT inside
-    ``applyInPandas`` (components after blocking are tiny; the all-pairs
-    structure the reference feeds graph-tool never arises).
+    one exact sparse Hungarian solve PER COMPONENT, streamed through the
+    per-component driver :func:`_per_component` on every task slot
+    (components after blocking are tiny; the all-pairs structure the
+    reference feeds graph-tool never arises).
 
     Determinism among equal-weight optima comes from the deterministic
     weight jitter of :func:`_solve_component` (the reference inherits
@@ -691,27 +776,36 @@ def mwgm_exact(
     Returns (id_a, id_b, score) of the optimal (or, for components above
     ``max_component`` only, 1/2-approximate) matching.
     """
-    import pandas as pd
-
     pairs, _ = _by_component(scored, score_col)
-    out_schema = pairs.select("id_a", "id_b", "score").schema
 
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
+    def solve(id_a, id_b, score):
         import numpy as np
 
-        la, lb, ia, ib, s, match_l, _, _ = _solve_component(pdf, max_component)
+        la, lb, ia, ib, s, match_l, _, _ = _solve_component(
+            id_a, id_b, score, max_component
+        )
         rows = np.flatnonzero(match_l >= 0)
         cols = match_l[rows]
-        lookup = {(int(i), int(j)): float(x) for i, j, x in zip(ia, ib, s)}
-        return pd.DataFrame(
-            {
-                "id_a": la[rows],
-                "id_b": lb[cols],
-                "score": [lookup[(int(i), int(j))] for i, j in zip(rows, cols)],
-            }
-        )
+        # each matched (row, col) is an edge: take its score (the last
+        # edge's, should the input repeat a pair)
+        key = ia * lb.size + ib
+        order = np.argsort(key, kind="stable")
+        at = np.searchsorted(key[order], rows * lb.size + cols, side="right") - 1
+        return la[rows], lb[cols], s[order[at]]
 
-    return pairs.groupBy("cluster_id").applyInPandas(solve, out_schema)
+    return _per_component(pairs, solve, pairs.select("id_a", "id_b", "score").schema)
+
+
+_DUALS_SCHEMA = StructType(
+    [
+        StructField("kind", StringType()),
+        StructField("side", StringType()),
+        StructField("node", StringType()),
+        StructField("y", DoubleType()),
+        StructField("partner", StringType()),
+        StructField("viol", LongType()),
+    ]
+)
 
 
 def mwgm_exact_duals(
@@ -752,17 +846,14 @@ def mwgm_exact_duals(
     degradation is driver-visible, and the SQL oracle recomputes it
     independently from the component structure.
     """
-    import pandas as pd
-
     pairs, _ = _by_component(scored, score_col)
-    out_schema = (
-        "kind string, side string, node string, y double, partner string, viol long"
-    )
 
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
+    def solve(id_a, id_b, score):
         import numpy as np
 
-        la, lb, _, _, _, match_l, ya, yb = _solve_component(pdf, max_component)
+        la, lb, _, _, _, match_l, ya, yb = _solve_component(
+            id_a, id_b, score, max_component
+        )
         match_r = np.full(lb.size, -1, dtype=np.int64)
         matched = np.flatnonzero(match_l >= 0)
         match_r[match_l[matched]] = matched
@@ -781,18 +872,10 @@ def mwgm_exact_duals(
             viol += int((np.abs(yb[match_r < 0]) > eps).sum())
             kinds, sides, nodes = ["G"] + kinds, [None] + sides, [None] + nodes
             ys, partners, viols = [None] + ys, [None] + partners, [viol] + viols
-        return pd.DataFrame(
-            {
-                "kind": kinds,
-                "side": sides,
-                "node": nodes,
-                "y": ys,
-                "partner": partners,
-                "viol": viols,
-            }
-        )
+        cols = (kinds, sides, nodes, ys, partners, viols)
+        return tuple(np.array(c, dtype=object) for c in cols)
 
-    return pairs.groupBy("cluster_id").applyInPandas(solve, out_schema)
+    return _per_component(pairs, solve, _DUALS_SCHEMA)
 
 
 def mwgm_exact_certificate(

@@ -52,6 +52,8 @@ class CurationPipeline(CheckpointedPipeline):
     """
 
     STAGES = ("filter", "scrub", "dedup", "select", "pack")
+    # each stage after the first reads the one before it
+    INPUTS = dict(zip(STAGES, [()] + [(s,) for s in STAGES[:-1]]))
 
     def __init__(self, spark, root: str, config: CurationConfig | None = None):
         self.spark = spark
@@ -89,8 +91,7 @@ class CurationPipeline(CheckpointedPipeline):
                 .where(F.size(tokens(F.col("text"))) >= c.min_tokens)
                 .select("id", "url", "domain", "lang", "text")
             )
-        prev = {"scrub": "filter", "dedup": "scrub", "select": "dedup",
-                "pack": "select"}[stage]
+        [prev] = self.INPUTS[stage]
         cur = tables[prev]
         if stage == "scrub":
             clean = pii_scrub(cur, id_col="id", text_col="text")

@@ -13,9 +13,11 @@ Stages (SURVEY.md §7):
   extract → blocks → pairs → scores → matches → clusters
 
 Each stage records per-file lineage (committed ``part-*`` file → row
-count, read from the parquet footers on the driver, no Spark job) plus
-wall-clock into ``<root>/_metrics/<stage>.json`` — the analog of the
-reference's blocking stats.csv audit (README.md:380-383).
+count, read from the parquet footers on the driver, no Spark job), its
+table schema and wall-clock into ``<root>/_metrics/<stage>.json`` — the
+analog of the reference's blocking stats.csv audit (README.md:380-383).
+A resumed run opens a committed table with the recorded schema (inferring
+one runs a Spark job), and only if the rest of the run reads it.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ from dataclasses import dataclass, field
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from entity_matchers_spark.extraction import with_extracted_text
 from entity_matchers_spark.operators import blocking, clustering, matching, scoring
@@ -96,6 +99,15 @@ class CheckpointedPipeline:
     """
 
     STAGES = ("extract", "blocks", "pairs", "scores", "matches", "clusters")
+    # the committed tables each stage's body (``_build``) reads
+    INPUTS = {
+        "extract": (),
+        "blocks": ("extract",),
+        "pairs": ("blocks",),
+        "scores": ("pairs", "extract"),
+        "matches": ("scores",),
+        "clusters": ("extract", "matches"),
+    }
 
     def __init__(self, spark: SparkSession, root: str, config: PipelineConfig | None = None):
         self.spark = spark
@@ -111,7 +123,14 @@ class CheckpointedPipeline:
         return os.path.exists(f"{self._path(stage)}/_SUCCESS")
 
     def read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(stage))
+        """The committed table of ``stage``, opened with the schema its
+        commit recorded: no Spark job."""
+        with open(f"{self.root}/_metrics/{stage}.json") as f:
+            record = json.load(f)
+        if "schema" not in record:
+            raise ValueError(f"_metrics/{stage}.json records no schema: recommit {stage!r}")
+        schema = StructType.fromJson(record["schema"])
+        return self.spark.read.schema(schema).parquet(self._path(stage))
 
     def _commit(self, stage: str, df: DataFrame, started: float) -> DataFrame:
         path = self._path(stage)
@@ -128,6 +147,7 @@ class CheckpointedPipeline:
             "partitions": len(lineage),
             "partition_rows": lineage,
             "wall_sec": round(time.time() - started, 3),
+            "schema": df.schema.jsonValue(),
             "config": {k: v for k, v in vars(self.config).items() if not isinstance(v, dict)},
         }
         os.makedirs(f"{self.root}/_metrics", exist_ok=True)
@@ -147,32 +167,37 @@ class CheckpointedPipeline:
                 F.col("page_id").alias("id"), "url", "warc_ts", "lang",
                 F.col("extracted_text").alias("text"),
             )
-        docs = tables["extract"]
         if stage == "blocks":
             return c.blocks(
-                docs.select("id", "text", blocking.normalized_domain("url").alias("domain"))
+                tables["extract"].select(
+                    "id", "text", blocking.normalized_domain("url").alias("domain")
+                )
             )
         if stage == "pairs":
             return c.pairs(tables["blocks"])
         if stage == "scores":
-            return c.scores(tables["pairs"], docs)
+            return c.scores(tables["pairs"], tables["extract"])
         if stage == "matches":
             return c.matches(tables["scores"])
         if stage == "clusters":
-            return clustering.clusters_with_singletons(docs, tables["matches"])
+            return clustering.clusters_with_singletons(tables["extract"], tables["matches"])
         raise ValueError(f"unknown stage {stage}")
 
     # -- public API ---------------------------------------------------------
 
     def run(self, pages: DataFrame, through: str | None = None) -> DataFrame:
         """Run the uncommitted stages up to ``through`` (default: the last)
-        and return its table."""
+        and return its table. A committed stage is opened only if a stage
+        still to run, or the return value, reads it."""
         through = through or self.STAGES[-1]
+        stages = self.STAGES[: self.STAGES.index(through) + 1]
+        todo = [s for s in stages if not self.is_committed(s)]
+        needed = {through}.union(*(self.INPUTS[s] for s in todo))
         tables: dict[str, DataFrame] = {}
-        for stage in self.STAGES[: self.STAGES.index(through) + 1]:
-            if self.is_committed(stage):
-                tables[stage] = self.read(stage)
-            else:
+        for stage in stages:
+            if stage in todo:
                 started = time.time()
                 tables[stage] = self._commit(stage, self._build(stage, pages, tables), started)
+            elif stage in needed:
+                tables[stage] = self.read(stage)
         return tables[through]

@@ -2320,8 +2320,9 @@ def q_er_stable_marriage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Suitor-optimal stable matching over the blocked candidate scores
     (Gale–Shapley, alignment.py:92-148,180-233 semantics), decomposed over
     connected components of the candidate graph: one CC pass + one
-    sequential deferred-acceptance solve per component in applyInPandas,
-    with oversized components routed to the round-based distributed loop.
+    sequential deferred-acceptance solve per component, streamed by one
+    mapInPandas per partition over a cluster_id repartition, with
+    oversized components routed to the round-based distributed loop.
 
     Full-value SQL oracle (Q_ER_STABLE_MARRIAGE_SQL): the list-shrinking
     parallel Gale–Shapley round — free suitors propose to their best
@@ -2395,7 +2396,8 @@ WHERE tag = 'E' AND iter = (SELECT max(iter) FROM gs)
 def q_er_mwgm_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT max-weight bipartite matching (alignment_finder.py:84-140):
     hash-min CC over candidate edges, then one sparse-Hungarian solve per
-    component via applyInPandas. The input is threshold+top-k filtered
+    component, streamed by one mapInPandas per partition over a cluster_id
+    repartition. The input is threshold+top-k filtered
     first — exactly the reference's ``find_alignment`` flow
     (alignment_finder.py:28-77 thresholds and keeps k nearest BEFORE
     mwgm), which also keeps components small.

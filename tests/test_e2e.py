@@ -95,7 +95,27 @@ def test_pipeline_resume_identical(spark, corpus, tmp_path_factory):
     p1 = CheckpointedPipeline(spark, root_b, cfg)
     p1.run(pages, through="scores")
     assert p1.is_committed("scores") and not p1.is_committed("matches")
-    resumed = CheckpointedPipeline(spark, root_b, cfg).run(pages)
+    # the resume opens only the committed tables the rest of the run reads
+    # (scores for matches, extract for clusters), each with its recorded
+    # schema: no Spark job runs before the matches body
+    sc = spark.sparkContext
+    p2 = CheckpointedPipeline(spark, root_b, cfg)
+    build, seen = p2._build, {}
+
+    def spy(stage, pages_, tables):
+        if stage == "matches":
+            seen["jobs"] = sc.statusTracker().getJobIdsForGroup("resume")
+            seen["tables"] = set(tables)
+        return build(stage, pages_, tables)
+
+    p2._build = spy
+    sc.setJobGroup("resume", "resume at matches")
+    try:
+        resumed = p2.run(pages)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert seen == {"jobs": [], "tables": {"extract", "scores"}}, seen
+    assert sc.statusTracker().getJobIdsForGroup("resume")  # the tracker sees jobs
     resumed_rows = sorted(tuple(r) for r in resumed.collect())
 
     assert full_rows == resumed_rows
@@ -132,6 +152,20 @@ def test_pipeline_commit_refuses_lineage_it_cannot_read(spark, tmp_path):
     with pytest.raises(ValueError, match="part-"):
         pipe._commit("extract", spark.range(3), time.time())
     assert not (tmp_path / "_metrics").exists()
+
+
+def test_pipeline_read_refuses_stage_without_recorded_schema(spark, tmp_path):
+    """A committed stage whose metrics record holds no schema is refused,
+    not opened by schema inference."""
+    pipe = CheckpointedPipeline(spark, str(tmp_path))
+    pipe._commit("extract", spark.range(3), time.time())
+    assert pipe.read("extract").count() == 3
+    record_path = tmp_path / "_metrics" / "extract.json"
+    record = json.loads(record_path.read_text())
+    del record["schema"]
+    record_path.write_text(json.dumps(record))
+    with pytest.raises(ValueError, match="no schema"):
+        pipe.read("extract")
 
 
 def test_score_pairs_plan_one_arrow_node_over_spread_docs(spark):

@@ -837,3 +837,221 @@ def test_sparse_hungarian_adversarial_shapes():
     got = sum(lut[(i, ml[i])] for i in range(L) if ml[i] >= 0)
     assert abs(got - 2.0 * (L - 1)) < 1e-6
     assert all(ya[i] + yb[j] >= x - 1e-7 for i, j, x in zip(ia, ib, w))
+
+
+def _sparse_hungarian_max_dense_labels(ia, ib, wj, nl, nr):
+    """The sparse kernel as it was before its search labels became
+    reached-set dicts: ``dist``, ``finalized`` and ``prev_r`` are dense
+    ``nr``-sized arrays allocated per left node. Kept as the reference the
+    bounded kernel must reproduce bit for bit."""
+    import heapq
+
+    import numpy as np
+
+    order = np.argsort(ia, kind="stable")
+    ib_s = ib[order]
+    c_s = -wj[order]
+    indptr = np.zeros(nl + 1, dtype=np.int64)
+    np.add.at(indptr, ia + 1, 1)
+    indptr = np.cumsum(indptr)
+    u = np.zeros(nl)
+    np.minimum.at(u, ia, -wj)
+    v = np.zeros(nr)
+    match_l = np.full(nl, -1, dtype=np.int64)
+    match_r = np.full(nr, -1, dtype=np.int64)
+    for s in range(nl):
+        if indptr[s] == indptr[s + 1]:
+            u[s] = 0.0
+            continue
+        dist = np.full(nr, np.inf)
+        finalized = np.zeros(nr, dtype=bool)
+        prev_r = np.full(nr, -1, dtype=np.int64)
+        t_left = {s: 0.0}
+        best_dummy_val, best_dummy_left = -u[s], s
+        heap: list = []
+        lo, hi = indptr[s], indptr[s + 1]
+        nd = c_s[lo:hi] - u[s] - v[ib_s[lo:hi]]
+        for jj, dd in zip(ib_s[lo:hi], nd):
+            if dd < dist[jj]:
+                dist[jj] = dd
+                prev_r[jj] = s
+                heapq.heappush(heap, (dd, int(jj)))
+        target_right = -1
+        target_left = -1
+        while True:
+            while heap and (finalized[heap[0][1]] or heap[0][0] > dist[heap[0][1]]):
+                heapq.heappop(heap)
+            if not heap or best_dummy_val < heap[0][0]:
+                target_left = best_dummy_left
+                big_d = best_dummy_val
+                break
+            d_j, j = heapq.heappop(heap)
+            finalized[j] = True
+            i2 = match_r[j]
+            if i2 < 0:
+                target_right = j
+                big_d = d_j
+                break
+            t_left[i2] = d_j
+            cand = d_j - u[i2]
+            if cand < best_dummy_val:
+                best_dummy_val, best_dummy_left = cand, i2
+            lo, hi = indptr[i2], indptr[i2 + 1]
+            nd = d_j + c_s[lo:hi] - u[i2] - v[ib_s[lo:hi]]
+            for jj, dd in zip(ib_s[lo:hi], nd):
+                if not finalized[jj] and dd < dist[jj]:
+                    dist[jj] = dd
+                    prev_r[jj] = i2
+                    heapq.heappush(heap, (dd, int(jj)))
+        for i2, t in t_left.items():
+            u[i2] += big_d - t
+        fin = finalized & (dist < big_d)
+        v[fin] += dist[fin] - big_d
+        if target_right >= 0:
+            j = target_right
+        elif target_left == s:
+            continue
+        else:
+            j = match_l[target_left]
+            match_l[target_left] = -1
+        while True:
+            i2 = prev_r[j]
+            nxt = match_l[i2]
+            match_l[i2] = j
+            match_r[j] = i2
+            if i2 == s:
+                break
+            j = nxt
+    return match_l, -u, -v
+
+
+def test_sparse_hungarian_bounded_labels_equal_dense_labels():
+    """Keeping each search's labels over the rights it reaches changes no
+    bit of the kernel's output: on seeded random components (distinct and
+    tie-heavy weights, isolated nodes) ``match_l``, ``ya`` and ``yb`` are
+    identical to the dense-label reference."""
+    import numpy as np
+
+    from entity_matchers_spark.operators.matching import _sparse_hungarian_max
+
+    rng = np.random.RandomState(2024)
+    for trial in range(150):
+        nl, nr = rng.randint(1, 40), rng.randint(1, 40)
+        keep = rng.rand(nl, nr) < rng.uniform(0.05, 0.6)
+        ia, ib = np.nonzero(keep)
+        if ia.size == 0:
+            continue
+        w = rng.rand(ia.size) if trial % 2 else rng.randint(1, 5, ia.size) * 0.25
+        w = w + 1e-9 * rng.rand(ia.size) * (trial % 3 != 0)
+        perm = rng.permutation(ia.size)  # edge order as a batch delivers it
+        args = (ia[perm], ib[perm], w[perm], nl, nr)
+        got = _sparse_hungarian_max(*args)
+        want = _sparse_hungarian_max_dense_labels(*args)
+        for g, x in zip(got, want):
+            assert np.array_equal(g, x), trial
+
+
+def _solver_outputs(scored):
+    """Sorted rows of the three per-component solvers over ``scored``."""
+    from entity_matchers_spark.operators.matching import (
+        mwgm_exact,
+        mwgm_exact_duals,
+        stable_marriage_components,
+    )
+
+    return {
+        f.__name__: sorted(str(tuple(r)) for r in f(scored).collect())
+        for f in (mwgm_exact, mwgm_exact_duals, stable_marriage_components)
+    }
+
+
+def _random_components(spark):
+    """Candidates over 40 x 40 ids: several components, the largest with
+    far more than 3 edges."""
+    import random
+
+    rng = random.Random(5)
+    edges = {(rng.randrange(40), 100 + rng.randrange(40)) for _ in range(70)}
+    return _scores(spark, [(a, b, round(rng.random(), 6)) for a, b in sorted(edges)])
+
+
+def test_component_solvers_independent_of_arrow_batch_size(spark):
+    """With 3-row Arrow batches a component spans several batches; the
+    streamed driver carries it across them and all three solvers give the
+    same output as with the default batch size."""
+    scored = _random_components(spark)
+    want = _solver_outputs(scored)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = _solver_outputs(scored)
+    finally:
+        spark.conf.set(key, old)
+    assert got == want
+    from entity_matchers_spark.operators.matching import _by_component
+
+    pairs, _ = _by_component(scored, "score")
+    assert pairs.groupBy("cluster_id").count().agg(F.max("count")).first()[0] > 3
+
+
+def test_component_solvers_independent_of_partition_count(spark, monkeypatch):
+    """One partition (every component in one stream) and eight give the
+    same output from all three solvers."""
+    from entity_matchers_spark.operators import matching
+
+    scored = _random_components(spark)
+    want = _solver_outputs(scored)
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    monkeypatch.setattr(matching, "default_partitions", lambda _spark: 1)
+    spark.conf.set(key, "1")
+    try:
+        got = _solver_outputs(scored)
+    finally:
+        spark.conf.set(key, old)
+    assert got == want
+
+
+def test_component_solvers_stream_over_explicit_partitioning(spark):
+    """Each solver is one ``MapInPandas`` over a hash exchange on
+    ``cluster_id`` into ``default_partitions`` — an explicit count AQE
+    does not coalesce — and no grouped ``FlatMapGroupsInPandas``."""
+    import re
+
+    from entity_matchers_spark.operators.matching import (
+        mwgm_exact,
+        mwgm_exact_duals,
+        stable_marriage_components,
+    )
+    from entity_matchers_spark.session import default_partitions
+
+    scored = _random_components(spark)
+    n = default_partitions(spark)
+    for solver in (mwgm_exact, mwgm_exact_duals, stable_marriage_components):
+        df = solver(scored)
+        plan = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
+        lines = plan.splitlines()
+        assert "FlatMapGroupsInPandas" not in plan, plan
+        [i] = [i for i, ln in enumerate(lines) if "MapInPandas" in ln]
+        below = "\n".join(lines[i + 1 : i + 4])
+        assert re.search(
+            rf"Exchange hashpartitioning\(cluster_id#\d+L?, {n}\), REPARTITION_BY_NUM", below
+        ), plan
+
+
+def test_connected_components_raises_when_not_converged(spark):
+    """A long chain under permuted ids needs more propagation steps than a
+    small ``max_iterations`` allows: the distributed loop raises instead
+    of returning split components."""
+    import random
+
+    ids = list(range(24))  # converges in 12 iterations
+    random.Random(3).shuffle(ids)
+    edges = spark.createDataFrame(
+        [(ids[i], ids[i + 1]) for i in range(len(ids) - 1)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="still changing"):
+        connected_components(edges, max_iterations=2, driver_max_edges=0)
+    got = connected_components(edges, driver_max_edges=0)
+    assert {r.cluster_id for r in got.collect()} == {0}
