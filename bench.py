@@ -10,6 +10,9 @@ per BASELINE.json's north rule), and print ONE JSON line::
      "queries": {name: sec, ...}, "sf": 0.1,
      "pairs_scored_per_sec": ..., "scaling": {...}}
 
+``--growth`` appends the candidate-growth audit to that line as
+``growth``; ``--growth-only`` runs the audit alone.
+
 ``--probe MASTER`` is the internal child mode used by the scaling probe:
 build the candidate pairs once (untimed), then time ``--repeats`` full
 scoring passes and print a small JSON dict. Child processes are required
@@ -191,7 +194,7 @@ def vocab_scaled_growth(spark, n_small: int = 500, n_big: int = 5000) -> dict:
     import math
 
     from entity_matchers_spark.corpus import synthetic_documents
-    from entity_matchers_spark.functions.shingles import hashed_shingle_table
+    from entity_matchers_spark.functions.shingles import gram_hashes, gram_sets
     from entity_matchers_spark.operators.dedup import (
         containment_neardup_pairs,
         minhash_neardup_pairs,
@@ -199,23 +202,26 @@ def vocab_scaled_growth(spark, n_small: int = 500, n_big: int = 5000) -> dict:
     )
 
     vocab_per_doc = 40.0
+    # one shingle size for every row: the minhash and containment rows read
+    # the gram table, and the Jaccard rows build theirs at the same n
+    shingle_n = 7
     per_n: dict[int, dict[str, int]] = {}
     for n in (n_small, n_big):
         docs = synthetic_documents(spark, n, vocab_per_doc).localCheckpoint(eager=True)
-        g = hashed_shingle_table(docs, "doc_id", "text", n=7).localCheckpoint()
+        g = gram_sets(gram_hashes(docs, "doc_id", "text", shingle_n)).localCheckpoint()
         per_n[n] = {
             "docs": n,
             "minhash_cands": minhash_neardup_pairs(
                 docs, grams_arr=g, candidates_only=True
             ).count(),
             "jaccard_cands": prefix_filtered_jaccard_pairs(
-                docs, n=5, threshold=0.7, candidates_only=True
+                docs, n=shingle_n, threshold=0.7, candidates_only=True
             ).count(),
             "containment_cands": containment_neardup_pairs(
                 threshold=0.8, grams_arr=g, candidates_only=True
             ).count(),
             "jaccard_true": prefix_filtered_jaccard_pairs(
-                docs, n=5, threshold=0.7
+                docs, n=shingle_n, threshold=0.7
             ).count(),
         }
     small, big = per_n[n_small], per_n[n_big]
@@ -231,6 +237,7 @@ def vocab_scaled_growth(spark, n_small: int = 500, n_big: int = 5000) -> dict:
 
     return {
         "vocab_per_doc": vocab_per_doc,
+        "shingle_n": shingle_n,
         "counts": per_n,
         "growth_exponent": {
             k: expo(k)
@@ -417,8 +424,8 @@ def main() -> None:
     ap.add_argument("--probe", metavar="MASTER", default=None)
     ap.add_argument("--repeats", type=int, default=1)
     ap.add_argument("--no-scaling", action="store_true")
+    ap.add_argument("--growth", action="store_true")
     ap.add_argument("--growth-only", action="store_true")
-    ap.add_argument("--no-growth", action="store_true")
     args = ap.parse_args()
 
     if args.probe:
@@ -491,7 +498,7 @@ def main() -> None:
     # reported alongside
     total = round(sum(times.values()), 3)
     growth = None
-    if not args.no_growth:
+    if args.growth:
         # candidate-stage scale audit (sf0.01 vs the bench sf): cheap —
         # counts only, no verify stages — and the registry pass above
         # already warmed every shared table at the big sf

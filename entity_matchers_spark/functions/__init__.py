@@ -6,7 +6,7 @@ from entity_matchers_spark.functions.hashing import (
     stable_hash32,
     stable_hash64,
 )
-from entity_matchers_spark.functions.shingles import char_shingles, token_shingles, tokens
+from entity_matchers_spark.functions.shingles import token_shingles, tokens
 from entity_matchers_spark.functions.similarity import (
     char_jaccard,
     cosine_similarity,
@@ -19,7 +19,6 @@ from entity_matchers_spark.functions.similarity import (
 __all__ = [
     "MINHASH_PRIME",
     "char_jaccard",
-    "char_shingles",
     "cosine_similarity",
     "jaccard_arrays",
     "jaro_winkler_udf",

@@ -2,32 +2,64 @@
 
 The reference shingles with strsimpy 3-grams in a 20-process pool
 (/root/reference/deepmatcher/notebooks/create_dataset_neighbor.py:94-119) and
-its ES blocking uses 2+3-grams capped at 300 chars
-(/root/reference/README.md:378). Here shingling is a ``transform(sequence(...))``
-expression — JVM-side, codegen'd, no Python.
+its ES blocking uses 2+3-grams capped at 300 chars (reference README.md:378).
+
+Character n-grams have ONE builder: ``gram_hashes`` explodes each doc's gram
+POSITIONS and hashes every gram row-wise, and ``gram_sets`` folds those rows
+into per-doc distinct sets. The MinHash-LSH blocker, the scorer's 3-gram
+Jaccard, the near-dup family and the fingerprint queries all read it. Every
+per-gram operation is a plain projection inside whole-stage codegen; a
+``transform`` lambda over ``sequence(...)`` would build the same grams, but
+Spark interprets higher-order-function lambdas per element.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from entity_matchers_spark.functions.hashing import stable_hash32
+from entity_matchers_spark.session import spread_docs
 
-def char_shingles(col: Column | str, n: int = 3, distinct: bool = True) -> Column:
-    """Array of character n-grams. Strings shorter than ``n`` → empty array.
 
-    Oracle equivalent: ``[substr(s, i, n) for i in range(1, len(s)-n+2)]``.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    grams = F.when(
-        F.length(c) < n, F.array().cast("array<string>")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.length(c) - n + 1),
-            lambda i: c.substr(i, F.lit(n)),
-        )
+def gram_hashes(
+    df: DataFrame, id_col: str, text_col: str, n: int = 3, text_cap: int | None = None
+) -> DataFrame:
+    """(id, i, h): one row per char n-gram POSITION ``i`` (1-based) of the
+    lowercased text, first capped at ``text_cap`` chars when given. ``h`` is
+    the gram's 32-bit md5 prefix, the DuckDB oracles'
+    ``('0x'||substr(md5(g),1,8))::UBIGINT::BIGINT``. A doc whose text is
+    null or shorter than ``n`` gets ONE row with null ``i`` and ``h``.
+
+    The docs are spread by id after the capped text is projected
+    (``session.spread_docs``), so only that text moves, the hashing runs on
+    every task slot, and a per-id aggregate over the result needs no
+    shuffle of its own."""
+    t = F.substring(F.col(text_col), 1, text_cap) if text_cap else F.col(text_col)
+    capped = spread_docs(df.select(F.col(id_col).alias("id"), F.lower(t).alias("t")))
+    positions = capped.select(
+        "id",
+        "t",
+        F.explode_outer(
+            F.when(F.length("t") >= n, F.sequence(F.lit(1), F.length("t") - F.lit(n - 1)))
+        ).alias("i"),
     )
-    return F.array_distinct(grams) if distinct else grams
+    return positions.select(
+        "id", "i", stable_hash32(F.substring(F.col("t"), F.col("i"), n)).alias("h")
+    )
+
+
+def gram_sets(hashes: DataFrame) -> DataFrame:
+    """(id, grams: array<bigint>, sz) of a ``gram_hashes`` table: each doc's
+    distinct ``h`` in first-occurrence order, the order of the oracles'
+    ``list_distinct``. Grams whose md5 prefixes collide count once, alike
+    in both engines. A doc without grams gets an EMPTY array, sz 0."""
+    first = F.sort_array(F.collect_list(F.when(F.col("i").isNotNull(), F.struct("i", "h"))))
+    return (
+        hashes.groupBy("id")
+        .agg(F.array_distinct(first.getField("h")).alias("grams"))
+        .withColumn("sz", F.size("grams"))
+    )
 
 
 def tokens(col: Column | str, lowercase: bool = True) -> Column:
@@ -51,78 +83,3 @@ def token_shingles(col: Column | str, n: int = 2, distinct: bool = True) -> Colu
         )
     )
     return F.array_distinct(grams) if distinct else grams
-
-
-def hashed_shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct char n-grams as 32-bit md5-derived integers.
-
-    Same per-gram value as the oracle's
-    ``('0x' || substr(md5(g), 1, 8))::UBIGINT::BIGINT``, so gram-set
-    Jaccard computed over these arrays is engine-identical — while integer
-    array_intersect/array_union run ~5x faster than string sets and the
-    shuffled/broadcast payload shrinks ~4x. md5 collisions are possible but
-    deterministic and identical in both engines, so results still match.
-    """
-    return F.array_distinct(
-        F.transform(
-            char_shingles(col, n),
-            lambda g: F.conv(F.substring(F.md5(g), 1, 8), 16, 10).cast("long"),
-        )
-    )
-
-
-def hashed_shingle_table(
-    df,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    text_cap: int | None = None,
-):
-    """(id, grams: array<bigint>, sz) — the DataFrame-level fast path for
-    building a per-document hashed-gram SET table.
-
-    Value-identical to ``hashed_shingles`` (same md5-derived 32-bit ints,
-    same first-occurrence dedup order), but built as positional explode →
-    row-wise substring+md5 → collect_list + array_sort/array_distinct
-    re-assembly. The column-expression form runs its ``transform`` lambda
-    interpreted per element; for long texts (the 10k-char near-dup cap)
-    this form measured 2.5× faster (13.5 s → 5.3 s for 5k docs at sf0.1)
-    because every per-gram operation stays inside whole-stage codegen. The
-    price is one extra shuffle of (id, i, h) rows — 16 bytes each, cheap
-    next to interpreted hashing — so use THIS for materialized gram
-    tables and keep ``hashed_shingles`` for inline expressions over short
-    strings.
-
-    Docs with null text or no shingles get an EMPTY gram array (sz 0),
-    never null.
-    """
-    t = F.lower(F.substring(F.col(text_col), 1, text_cap)) if text_cap else F.lower(F.col(text_col))
-    pos = (
-        df.select(F.col(id_col).alias("id"), t.alias("t"))
-        .where(F.length("t") >= n)
-        .select(
-            "id",
-            "t",
-            F.explode(F.sequence(F.lit(1), F.length("t") - F.lit(n - 1))).alias("i"),
-        )
-        .select(
-            "id",
-            "i",
-            F.conv(
-                F.substring(F.md5(F.substring(F.col("t"), F.col("i").cast("int"), n)), 1, 8),
-                16,
-                10,
-            ).cast("long").alias("h"),
-        )
-    )
-    agg = pos.groupBy("id").agg(
-        F.array_distinct(
-            F.transform(F.array_sort(F.collect_list(F.struct("i", "h"))), lambda s: s["h"])
-        ).alias("grams")
-    )
-    empty = (
-        df.select(F.col(id_col).alias("id"))
-        .join(agg.select("id"), "id", "left_anti")
-        .select("id", F.array().cast("array<bigint>").alias("grams"))
-    )
-    return agg.unionByName(empty).withColumn("sz", F.size("grams"))

@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from entity_matchers_spark.functions.hashing import MINHASH_PRIME, minhash_permutation_params
-from entity_matchers_spark.session import spread_docs
+from entity_matchers_spark.functions.shingles import gram_hashes, gram_sets
 
 
 def normalized_domain(url: Column | str) -> Column:
@@ -62,37 +62,6 @@ def domain_block_keys(df: DataFrame, id_col: str = "id", url_col: str = "url") -
     """(id, block_id) from the normalized URL domain."""
     return domain_keys(
         df.select(F.col(id_col).alias("id"), normalized_domain(url_col).alias("domain"))
-    )
-
-
-def _gram_hashes(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int, text_cap: int
-) -> DataFrame:
-    """(id, h): the 32-bit md5 prefix of every char n-gram POSITION of the
-    lowercased, capped text — plain projections, whole-stage codegen end to
-    end. Docs whose text yields no shingle get ONE row with a null ``h``,
-    which ``lsh_signatures`` turns into the sentinel signature.
-
-    The docs are spread by id after the capped text is projected, so only
-    that text moves and the per-position hashing runs on every task slot;
-    the signatures' per-id ``min()`` then reuses that partitioning."""
-    t = F.lower(F.substring(F.col(text_col), 1, text_cap))
-    capped = spread_docs(df.select(F.col(id_col).alias("id"), t.alias("t")))
-    positions = capped.select(
-        "id",
-        "t",
-        F.explode_outer(
-            F.when(
-                F.length("t") >= shingle_n,
-                F.sequence(F.lit(1), F.length("t") - F.lit(shingle_n - 1)),
-            )
-        ).alias("i"),
-    )
-    # same per-gram value as the DuckDB oracle's
-    # ('0x'||substr(md5(g),1,8))::UBIGINT::BIGINT
-    gram = F.substring(F.col("t"), F.col("i").cast("int"), shingle_n)
-    return positions.select(
-        "id", F.conv(F.substring(F.md5(gram), 1, 8), 16, 10).cast("long").alias("h")
     )
 
 
@@ -159,7 +128,7 @@ def minhash_signatures(
     Docs whose text yields no shingles get the sentinel signature
     ``MINHASH_PRIME`` in every column.
     """
-    return lsh_signatures(_gram_hashes(df, id_col, text_col, shingle_n, text_cap), num_perm, seed)
+    return lsh_signatures(gram_hashes(df, id_col, text_col, shingle_n, text_cap), num_perm, seed)
 
 
 def minhash_block_keys(
@@ -180,7 +149,7 @@ def minhash_block_keys(
     per band (dropped by the block cap once there are many of them).
     """
     return lsh_band_keys(
-        _gram_hashes(df, id_col, text_col, shingle_n, text_cap), num_bands, rows_per_band, seed
+        gram_hashes(df, id_col, text_col, shingle_n, text_cap), num_bands, rows_per_band, seed
     )
 
 
@@ -329,8 +298,6 @@ def weighted_topk_jaccard_cascade(
 
     from pyspark.sql import Window
 
-    from entity_matchers_spark.functions.shingles import hashed_shingles
-
     # one per-id meta table: length per level
     meta_cols = [F.col(id_col).alias("id")]
     for i, (c, _w) in enumerate(columns):
@@ -341,10 +308,8 @@ def weighted_topk_jaccard_cascade(
     grams = reduce(
         DataFrame.unionAll,
         [
-            docs.select(
-                F.col(id_col).alias("id"),
-                F.lit(i).alias("lvl"),
-                F.explode(hashed_shingles(F.lower(F.col(c)), n=n)).alias("block_id"),
+            gram_sets(gram_hashes(docs, id_col, c, n)).select(
+                "id", F.lit(i).alias("lvl"), F.explode("grams").alias("block_id")
             )
             for i, (c, _w) in enumerate(columns)
         ],

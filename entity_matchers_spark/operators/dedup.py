@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from entity_matchers_spark.functions.shingles import tokens
+from entity_matchers_spark.functions.shingles import gram_hashes, gram_sets, tokens
 from entity_matchers_spark.functions.similarity import jaccard_hashed_udf
 from entity_matchers_spark.operators.blocking import block_self_join, lsh_band_keys
 
@@ -149,9 +149,7 @@ def prefix_filtered_jaccard_pairs(
     """
     from pyspark.sql import Window
 
-    from entity_matchers_spark.functions.shingles import hashed_shingle_table
-
-    grams_arr = hashed_shingle_table(df, id_col, text_col, n=n)
+    grams_arr = gram_sets(gram_hashes(df, id_col, text_col, n))
     # one md5 pass: prefix index, df table, and the verify stage all read
     # the materialized gram table instead of re-hashing the corpus per action
     grams_arr = grams_arr.localCheckpoint()
@@ -407,10 +405,8 @@ def minhash_neardup_pairs(
     explode simply has no signature row), which also retires the sentinel
     substring filter.
     """
-    from entity_matchers_spark.functions.shingles import hashed_shingle_table
-
     if grams_arr is None:
-        grams_arr = hashed_shingle_table(df, id_col, text_col, n=shingle_n, text_cap=text_cap)
+        grams_arr = gram_sets(gram_hashes(df, id_col, text_col, shingle_n, text_cap))
         # ONE md5 pass over the corpus; every downstream stage reads these bytes
         grams_arr = grams_arr.localCheckpoint()
     if blocks is None:
@@ -685,10 +681,8 @@ def containment_neardup_pairs(
     """
     from pyspark.sql import Window
 
-    from entity_matchers_spark.functions.shingles import hashed_shingle_table
-
     if grams_arr is None:
-        grams_arr = hashed_shingle_table(df, id_col, text_col, n=n).localCheckpoint()
+        grams_arr = gram_sets(gram_hashes(df, id_col, text_col, n)).localCheckpoint()
     e = grams_arr.select("id", "sz", F.explode("grams").alias("g"))
     # read three times (prefix join + verify's vocab count and collect):
     # materialize the document-frequency table once
@@ -763,10 +757,8 @@ def incremental_neardup_pairs(
     least one side in the delta; verification makes the result exact given
     banding recall (same 40×4 argument as ``minhash_neardup_pairs``).
     """
-    from entity_matchers_spark.functions.shingles import hashed_shingle_table
-
     if grams_arr is None:
-        grams_arr = hashed_shingle_table(df, id_col, text_col, n=shingle_n, text_cap=text_cap)
+        grams_arr = gram_sets(gram_hashes(df, id_col, text_col, shingle_n, text_cap))
         grams_arr = grams_arr.localCheckpoint()
     if blocks is None:
         # The full band table is the INDEX; the delta's slice of it is the

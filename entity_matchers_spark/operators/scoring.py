@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from entity_matchers_spark.functions.shingles import hashed_shingles, tokens
+from entity_matchers_spark.functions.shingles import gram_hashes, gram_sets, tokens
 from entity_matchers_spark.functions.similarity import (
     jaccard_hashed_udf,
     jaro_winkler_udf,
@@ -90,10 +90,12 @@ def score_pairs(
     raw doubles are bit-equal across engines (cosine inputs are small
     integer counts, so dot and norms are exact).
 
-    Join strategy: the per-doc side table joins the pairs twice on id
-    (once per side). The planner picks the strategy from stats: at the
-    benchmarked sizes the side table is broadcast, on larger inputs the
-    joins shuffle. Feature math happens after both joins on the
+    Join strategy: each side's features are projected over the docs
+    spread by id, joined on id to the docs' 3-gram sets of the first 300
+    chars (``shingles.gram_sets``), and joined to the pairs. The planner
+    picks the strategies from stats: at the benchmarked sizes the gram
+    sets and the side tables are broadcast, on larger inputs the joins
+    shuffle. Feature math happens after both joins on the
     already-joined rows; the three pandas UDFs share one
     ``ArrowEvalPython`` node, i.e. one Arrow round trip per batch.
     """
@@ -106,9 +108,9 @@ def score_pairs(
     # whole stage; finer tasks level the tail.
     sc = pairs.sparkSession.sparkContext
     pairs = pairs.repartition(3 * sc.defaultParallelism, "id_a", "id_b")
-    # per-doc features computed ONCE per doc, spread over every task slot
-    # (spread_docs); the pair rows carry only the capped name/canon strings
-    # + hashed gram set — never the raw text
+    # per-doc features over the docs spread by id (spread_docs), so the
+    # side projection runs on every task slot; the pair rows carry only the
+    # capped name/canon strings + hashed gram set, never the raw text
     canon = F.substring(
         F.concat_ws(
             " ",
@@ -119,21 +121,30 @@ def score_pairs(
         1,
         TSLR_CAP,
     )
-    # vector L2 norm is a per-DOC quantity: compute it map-side once and
-    # ship the scalar, so the per-pair cosine is one zip_with dot, not three
-    vec = hashed_token_vector(F.col(text_col))
-    norm = F.sqrt(F.aggregate(vec, F.lit(0.0), lambda acc, v: acc + v * v))
-    sides = spread_docs(docs, id_col).select(
-        F.col(id_col).alias("id"),
-        F.lower(F.substring(F.col(text_col), 1, name_cap)).alias("name"),
-        canon.alias("canon"),
-        hashed_shingles(F.lower(F.substring(F.col(text_col), 1, 300))).alias("sh"),
-        vec.alias("vec"),
-        norm.alias("norm"),
+    spread = spread_docs(docs, id_col)
+    # null text gets no gram row, so the left join below leaves its sh null
+    # (jac3 null), while text shorter than 3 chars gets an empty set
+    grams = gram_sets(
+        gram_hashes(docs.where(F.col(text_col).isNotNull()), id_col, text_col, 3, 300)
     )
 
     def side(s: str) -> DataFrame:
-        return sides.select(*[F.col(c).alias(f"{c}_{s}") for c in sides.columns])
+        feats = spread.select(
+            F.col(id_col).alias(f"id_{s}"),
+            F.lower(F.substring(F.col(text_col), 1, name_cap)).alias(f"name_{s}"),
+            canon.alias(f"canon_{s}"),
+            hashed_token_vector(F.col(text_col)).alias(f"vec_{s}"),
+        )
+        # vector L2 norm is a per-DOC quantity, shipped as a scalar so the
+        # per-pair cosine is one zip_with dot, not three. It reads the
+        # projected vec in its own select, so each side builds the vector
+        # once (inlined, norm would fold the token buckets a second time)
+        vec = F.col(f"vec_{s}")
+        feats = feats.withColumn(
+            f"norm_{s}", F.sqrt(F.aggregate(vec, F.lit(0.0), lambda acc, v: acc + v * v))
+        )
+        sh = grams.select(F.col("id").alias(f"id_{s}"), F.col("grams").alias(f"sh_{s}"))
+        return feats.join(sh, f"id_{s}", "left")
 
     joined = pairs.join(side("a"), "id_a").join(side("b"), "id_b")
     # equal canonical strings score 1.0 by the CASE, but the levenshtein

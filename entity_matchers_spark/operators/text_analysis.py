@@ -10,8 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from entity_matchers_spark.functions.hashing import MINHASH_PRIME, stable_hash32
-from entity_matchers_spark.functions.shingles import char_shingles, tokens
+from entity_matchers_spark.functions.hashing import MINHASH_PRIME
+from entity_matchers_spark.functions.shingles import gram_hashes, tokens
 
 # Tiny deterministic stopword marker sets per language — an n-gram/stopword
 # heuristic language identifier (fasttext-style lid is a model; this is the
@@ -101,23 +101,15 @@ def fingerprint_mink(
     hashes of the doc's char shingles, concatenated. A compact, deterministic
     document fingerprint (rolling-hash winnowing analog) whose equality ≈
     near-identity; groupBy(fp) is an aggressive near-dedup."""
-    grams = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(char_shingles(F.lower(F.col(text_col)), n=shingle_n)).alias("g"),
-    )
-    h = (F.conv(F.substring(F.md5("g"), 1, 8), 16, 10).cast("long") % MINHASH_PRIME).alias("h")
+    h = F.col("h") % MINHASH_PRIME
     bottom = (
-        grams.select("id", h)
+        gram_hashes(df, id_col, text_col, shingle_n)
         .groupBy("id")
-        .agg(F.slice(F.sort_array(F.collect_set("h")), 1, k).alias("mins"))
+        .agg(F.slice(F.sort_array(F.collect_set(h)), 1, k).alias("mins"))
     )
-    fp = bottom.select(
-        "id", F.concat_ws("-", F.transform(F.col("mins"), lambda v: v.cast("string"))).alias("fp")
-    )
-    empty = df.select(F.col(id_col).alias("id")).join(fp.select("id"), "id", "left_anti").select(
-        "id", F.lit("").alias("fp")
-    )
-    return fp.unionByName(empty)
+    # a doc without shingles has only a null h: collect_set skips it, and
+    # concat_ws over the empty mins array gives its fp ""
+    return bottom.select("id", F.concat_ws("-", F.col("mins").cast("array<string>")).alias("fp"))
 
 
 def _max_token_multiplicity(toks: Column) -> Column:
@@ -470,33 +462,17 @@ def winnowing_fingerprints(
     shares a fingerprint, at expected density 2/(w+1) — the positional
     complement of :func:`fingerprint_mink`'s bottom-k sketch.
 
-    Plan shape: posexplode of the positional gram array → one window
-    min over each doc's hash sequence (partitioned BY DOC — per-doc
+    Plan shape: the gram positions of ``shingles.gram_hashes`` → one
+    window min over each doc's hash sequence (partitioned BY DOC — per-doc
     sequences are KB-bounded, so the sort never sees corpus-scale data)
-    → an equi-join of window minima back to gram positions on
-    (id, hash) for the rightmost-tie argmax → one distinct. Docs with
-    fewer than ``w`` grams emit the min of what they have (one window).
+    → one distinct. Docs with fewer than ``w`` grams emit the min of what
+    they have (one window).
     All integers end to end — engine-exact.
     """
-    # positional explode + row-wise substring instead of a transform-lambda
-    # gram array: every per-gram op stays inside whole-stage codegen (the
-    # same device as shingles.hashed_shingle_table; the lambda form runs
-    # interpreted per element)
     g = (
-        df.select(F.col(id_col).alias("id"), F.lower(F.col(text_col)).alias("t"))
-        .where(F.length("t") >= k)
-        .select(
-            "id",
-            "t",
-            F.explode(F.sequence(F.lit(0), F.length("t") - k)).alias("pos"),
-        )
-        .select(
-            "id",
-            "pos",
-            stable_hash32(
-                F.col("t").substr(F.col("pos") + F.lit(1), F.lit(k))
-            ).alias("h"),
-        )
+        gram_hashes(df, id_col, text_col, k)
+        .where(F.col("i").isNotNull())
+        .select("id", (F.col("i") - 1).alias("pos"), "h")
     )
 
     # Rightmost-min per window in ONE window aggregate: min over the

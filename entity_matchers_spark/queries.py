@@ -19,7 +19,7 @@ from entity_matchers_spark.functions.hashing import (
     MINHASH_PRIME,
     minhash_permutation_params,
 )
-from entity_matchers_spark.functions.shingles import hashed_shingles, tokens
+from entity_matchers_spark.functions.shingles import gram_hashes, gram_sets, tokens
 from entity_matchers_spark.operators import blocking, clustering, matching, scoring
 from entity_matchers_spark.plans.pipeline import PipelineConfig
 
@@ -61,12 +61,9 @@ def _doc_grams7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized hashed 7-gram table (id, grams, sz) for the documents
     corpus — shared by the MinHash near-dup pair and resolve queries so the
     registry hashes the corpus once (same idea as the ER-chain prefix)."""
-    from entity_matchers_spark.functions.shingles import hashed_shingle_table
-
     def build() -> DataFrame:
-        return hashed_shingle_table(
-            _docs(spark, sf_dir), "doc_id", "text", n=7, text_cap=10_000
-        )
+        docs = _read(spark, sf_dir, "documents")
+        return gram_sets(gram_hashes(docs, "doc_id", "text", 7, 10_000))
 
     return _er_cached(spark, sf_dir, "doc_grams7", build)
 
@@ -1260,7 +1257,7 @@ def q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bottom-k sketch fingerprint per document."""
     from entity_matchers_spark.operators.text_analysis import fingerprint_mink
 
-    return fingerprint_mink(_docs(spark, sf_dir)).select(
+    return fingerprint_mink(_read(spark, sf_dir, "documents")).select(
         F.col("id").alias("doc_id"), "fp"
     )
 
@@ -3313,10 +3310,9 @@ def q_topk_jaccard_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics as a window over the shared-gram join)."""
     from entity_matchers_spark.operators.blocking import topk_jaccard_candidates
 
-    docs = _docs(spark, sf_dir)
-    grams = docs.select(
-        F.col("doc_id").alias("id"),
-        F.explode(hashed_shingles(F.lower(F.substring("text", 1, 300)))).alias("block_id"),
+    docs = _read(spark, sf_dir, "documents")
+    grams = gram_sets(gram_hashes(docs, "doc_id", "text", 3, 300)).select(
+        "id", F.explode("grams").alias("block_id")
     )
     out = topk_jaccard_candidates(grams, k=5, max_block_size=GRAM_JOIN_CAP)
     return out.select("id_a", "id_b", F.round("jaccard", 9).alias("jaccard"), "rnk")
@@ -3971,7 +3967,7 @@ def q_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     any 14-char overlap between docs shares a fingerprint."""
     from entity_matchers_spark.operators.text_analysis import winnowing_fingerprints
 
-    return winnowing_fingerprints(_docs(spark, sf_dir), k=7, w=8).select(
+    return winnowing_fingerprints(_read(spark, sf_dir, "documents"), k=7, w=8).select(
         F.col("id").alias("doc_id"), "pos", "fp"
     )
 

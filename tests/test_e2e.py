@@ -49,7 +49,7 @@ def test_neardup_feed_bands_like_the_er_blocker(spark, corpus):
     table of the capped text through the near-dup feed gives exactly the
     chain's MinHash keys for every doc that has shingles. Shingle-less docs
     keep their sentinel keys on the ER side and never enter the index."""
-    from entity_matchers_spark.functions.shingles import hashed_shingle_table
+    from entity_matchers_spark.functions.shingles import gram_hashes, gram_sets
     from entity_matchers_spark.operators.dedup import minhash_band_blocks
 
     pages, _ = corpus
@@ -57,7 +57,7 @@ def test_neardup_feed_bands_like_the_er_blocker(spark, corpus):
     docs = pages.select(F.col("page_id").alias("id"), "text").unionByName(
         spark.createDataFrame([(-1, "ab"), (-2, None)], "id long, text string")
     )
-    grams = hashed_shingle_table(docs, "id", "text", n=cfg.shingle_n, text_cap=cfg.text_cap)
+    grams = gram_sets(gram_hashes(docs, "id", "text", cfg.shingle_n, cfg.text_cap))
     got = minhash_band_blocks(grams, cfg.num_bands, cfg.rows_per_band, cfg.seed)
     keys = cfg.minhash_keys(docs)
     want = keys.where("id >= 0")
@@ -171,7 +171,10 @@ def test_pipeline_read_refuses_stage_without_recorded_schema(spark, tmp_path):
 def test_score_pairs_plan_one_arrow_node_over_spread_docs(spark):
     """The three scoring UDFs share ONE ``ArrowEvalPython`` node, and a
     one-partition docs input reaches the side-table projection through a
-    hash exchange on the id."""
+    hash exchange on the id. The gram sets come from the positional
+    builder, so the plan has no ``transform`` over ``sequence`` (a lambda
+    Spark would interpret per gram), and ``norm`` reads the projected
+    ``vec``: ``hashed_token_vector``'s aggregate is built once per side."""
     docs = spark.createDataFrame(
         [(i, f"doc {i} text") for i in range(6)], "id long, text string"
     ).coalesce(1)
@@ -189,6 +192,28 @@ def test_score_pairs_plan_one_arrow_node_over_spread_docs(spark):
     for i in side:
         below = lines[i + 1].strip(" :+-")
         assert below.startswith("Exchange hashpartitioning(id#"), (lines[i], lines[i + 1])
+    assert "transform(sequence(" not in plan, plan
+    # the vector's fold over the token buckets of the lowercased text
+    assert plan.count("aggregate(transform(filter(split(lower(text") == 2, plan
+
+
+def test_score_pairs_null_and_short_text(spark):
+    """Null text scores a null jac3 (no gram set); text shorter than 3
+    chars has an empty gram set, which scores 0.0, also against another
+    empty set."""
+    docs = spark.createDataFrame(
+        [(0, "some page text"), (1, "other page text"), (2, None), (3, "ab"), (4, "")],
+        "id long, text string",
+    )
+    pairs = spark.createDataFrame(
+        [(0, 1), (0, 2), (1, 3), (2, 3), (3, 4)], "id_a long, id_b long"
+    )
+    got = {
+        (r["id_a"], r["id_b"]): r["jac3"]
+        for r in scoring.score_pairs(pairs, docs).collect()
+    }
+    # "some page text" / "other page text": 8 shared of 17 distinct 3-grams
+    assert got == {(0, 1): 8 / 17, (0, 2): None, (1, 3): 0.0, (2, 3): None, (3, 4): 0.0}, got
 
 
 def _assert_chain_matches_oracle(spark, build, oracle_sql):

@@ -11,7 +11,7 @@ from entity_matchers_spark.functions.hashing import (
     MINHASH_PRIME,
     minhash_permutation_params,
 )
-from entity_matchers_spark.functions.shingles import char_shingles, token_shingles, tokens
+from entity_matchers_spark.functions.shingles import gram_hashes, gram_sets, token_shingles, tokens
 from entity_matchers_spark.functions.similarity import (
     _jaro_winkler_one,
     char_jaccard,
@@ -22,13 +22,45 @@ from entity_matchers_spark.functions.similarity import (
 )
 
 
-def test_char_shingles(spark):
-    df = spark.createDataFrame([("abcdef",), ("ab",), ("",), ("aaaa",)], "s string")
-    got = [r[0] for r in df.select(char_shingles("s")).collect()]
-    assert got[0] == ["abc", "bcd", "cde", "def"]
-    assert got[1] == []
-    assert got[2] == []
-    assert got[3] == ["aaa"]  # distinct
+def test_gram_builder_matches_md5_reference(spark):
+    """The one char-gram builder: every position's md5 prefix in order, and
+    each doc's distinct set in first-occurrence order, against pure-Python
+    ``hashlib.md5``. Null, empty and too-short text give one null
+    position row and an empty set; the cap applies before the grams; and
+    grams are built over the lowercased text."""
+    import hashlib
+
+    def md5_prefix(g):
+        return int(hashlib.md5(g.encode()).hexdigest()[:8], 16)
+
+    texts = {
+        0: None, 1: "", 2: "ab", 3: "abc", 4: "aaaaa", 5: "abcdef",
+        6: "XyZ xyz abcabc", 7: "abcdefghij" * 3,
+    }
+    cap = 12
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    hashes = gram_hashes(docs, "doc_id", "text", 3, cap).localCheckpoint()
+
+    def ref_positions(t):
+        t = (t or "")[:cap].lower()
+        return [(i + 1, md5_prefix(t[i:i + 3])) for i in range(len(t) - 2)]
+
+    got = {}
+    for r in hashes.collect():
+        got.setdefault(r["id"], []).append((r["i"], r["h"]))
+    for doc_id, t in texts.items():
+        want = ref_positions(t) or [(None, None)]
+        assert sorted(got[doc_id], key=lambda p: p[0] or 0) == want, doc_id
+
+    sets = {r["id"]: (r["grams"], r["sz"]) for r in gram_sets(hashes).collect()}
+    for doc_id, t in texts.items():
+        want = list(dict.fromkeys(h for _, h in ref_positions(t)))
+        assert sets[doc_id] == (want, len(want)), doc_id
+    assert sets[0] == sets[1] == sets[2] == ([], 0)
+    assert sets[4][1] == 1  # "aaaaa": three positions, one distinct gram
+    assert sets[5][0] == [md5_prefix(g) for g in ("abc", "bcd", "cde", "def")]
+    assert sets[6][0][0] == md5_prefix("xyz")
+    assert len(got[7]) == cap - 2  # text longer than the cap
 
 
 def test_token_shingles_and_tokens(spark):
@@ -221,7 +253,6 @@ def test_prefix_filter_full_recall(spark):
     planted near-dups, padding variety, and stop-gram-heavy rows."""
     from pyspark.sql import functions as F
 
-    from entity_matchers_spark.functions.shingles import hashed_shingles
     from entity_matchers_spark.functions.similarity import jaccard_arrays
     from entity_matchers_spark.operators.dedup import prefix_filtered_jaccard_pairs
 
@@ -241,9 +272,7 @@ def test_prefix_filter_full_recall(spark):
         (r["id_a"], r["id_b"])
         for r in prefix_filtered_jaccard_pairs(docs, threshold=0.5).collect()
     }
-    g = docs.select(
-        F.col("doc_id").alias("id"), hashed_shingles(F.lower("text")).alias("grams")
-    )
+    g = gram_sets(gram_hashes(docs, "doc_id", "text"))
     a = g.select(F.col("id").alias("id_a"), F.col("grams").alias("ga"))
     b = g.select(F.col("id").alias("id_b"), F.col("grams").alias("gb"))
     brute = {
@@ -306,7 +335,6 @@ def test_prefix_filter_recall_at_integral_threshold(spark):
     pair whose Jaccard is exactly the threshold (ADVICE r2)."""
     from pyspark.sql import functions as F
 
-    from entity_matchers_spark.functions.shingles import hashed_shingles
     from entity_matchers_spark.functions.similarity import jaccard_arrays
     from entity_matchers_spark.operators.dedup import prefix_filtered_jaccard_pairs
 
@@ -327,9 +355,9 @@ def test_prefix_filter_recall_at_integral_threshold(spark):
             (r["id_a"], r["id_b"])
             for r in prefix_filtered_jaccard_pairs(docs, threshold=t).collect()
         }
-        g = docs.select(F.col("doc_id").alias("id"), hashed_shingles(F.lower("text")).alias("ga"))
-        a = g.select(F.col("id").alias("id_a"), F.col("ga").alias("gA"))
-        b = g.select(F.col("id").alias("id_b"), F.col("ga").alias("gB"))
+        g = gram_sets(gram_hashes(docs, "doc_id", "text"))
+        a = g.select(F.col("id").alias("id_a"), F.col("grams").alias("gA"))
+        b = g.select(F.col("id").alias("id_b"), F.col("grams").alias("gB"))
         brute = {
             (r["id_a"], r["id_b"])
             for r in a.crossJoin(b)
